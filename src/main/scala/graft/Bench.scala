@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -42,47 +42,23 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Round 20 (guide §2.2, VERDICT r19 item 2): the AQE coalescing
-      // knobs are EXPLICIT and env-overridable, with defaults equal to
-      // Spark's own — size-first coalescing (parallelismFirst=false)
-      // was implemented and MEASURED at four settings and REJECTED as a
-      // local default: this engine's hot reduce stages are CPU-dense
-      // and byte-light (array_intersect verifies, banded-bucket pair
-      // loops), so any size-based target serializes them
-      // (d_containment_prefix 2.4 → 2.8-4.7 s across every advisory
-      // size; OPTIMIZATION_r20.md §3 has the table). A production
-      // deployment whose stages ARE byte-proportional (the 100 TB
-      // shuffle-bound regime) can turn size-first coalescing on via
-      // these env vars without a code change. Do NOT flip the default
-      // back without re-running that experiment.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_BYTES", "1m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // JVM/codegen/shuffle/parquet warmup outside the timed region — the
     // alphabetically-first query otherwise absorbs several seconds of
     // scan-path JIT that belongs to no query.
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.range(1000L).repartition(8).count()
+    // An sf dir without documents skips this warm-up; any other failure
+    // is real and stops the bench.
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       docs.select(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.length(
           org.apache.spark.sql.functions.col("text")))).collect()
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => ()
+    }
 
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt.max(1)
     val selected = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet

@@ -1498,7 +1498,7 @@ object SparkEntry {
     // (cell, label) — a probed cell contributes only its qualifying slice
     // to the scoring stream. Own measured recall floor: low-selectivity
     // predicates spread each query's true same-label neighbors across
-    // MORE cells than the unfiltered case (FilteredProbe: nprobe=8/16
+    // MORE cells than the unfiltered case (measured: nprobe=8/16
     // scores 21/25/24 of 30 at sf0.001/.01/.1 where unfiltered IVF gets
     // comparable recall at nprobe=3 — nprobe must scale with 1/selectivity);
     // floor 15 with margin. label_ok proves no result crosses the

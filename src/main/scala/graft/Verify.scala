@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,14 +12,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val selected: Set[String] =
       if (args.length > 2) args.drop(2).toSet else SparkEntry.queries.keySet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     SparkEntry.queries.filter(kv => selected.contains(kv._1))
@@ -30,21 +24,8 @@ object Verify {
         failed += ((name, Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(SparkEntry.oracleSql)(DefaultFormats))
     // Loud failure record: a query that throws above is silently ABSENT from
     // the driver's per-query compare (its parquet never exists), which in
     // round 7 let a broken trail-read path shrink the correctness gate from
@@ -52,9 +33,8 @@ object Verify {
     // sidecar the judge (and the builder's own sanity runs) can read, and
     // exit non-zero only via the summary line — the driver still gets every
     // query that DID succeed.
-    val failJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failJson)
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      Serialization.write(failed.toMap)(DefaultFormats))
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size}/${SparkEntry.queries.size} " +
         s"queries FAILED: ${failed.map(_._1).mkString(", ")}")

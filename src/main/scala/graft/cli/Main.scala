@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count_distinct, sum}
 
+import graft.GraftSession
 import graft.core.{GraftError, TrailDB, TrailDBCons, TrailOps, TrailSchema}
 import graft.filter.EventFilter
 
@@ -176,15 +177,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(GraftError.BadArgs("no op").exitCode) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft-tdb")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      GraftSession(sys.env.getOrElse("GRAFT_MASTER", GraftSession.localMaster))
     // The CLI boundary maps every failure to its tdb_error_str-style name
     // and a DISTINCT exit code (GraftError.classify) — scripts branch on
     // the code like they would on the reference's tdb_error.

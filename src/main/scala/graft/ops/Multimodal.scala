@@ -1841,20 +1841,6 @@ object Multimodal {
     }.toDF("media_id", "bytes", "modality", "gate")
   }
 
-  /** [[mediaMetaGate]] fused with the KEPT image cohort's pixel decode
-    * (round 20, guide §8 "move big rows once"): the gate already streams
-    * every payload byte past the header walk, so decoding the kept
-    * images' thumbnails IN THE SAME PASS removes the second full read of
-    * the image cohort's bytes (and the separate decode job) that
-    * [[gatedMediaDedup]] used to pay in [[routedImageDedup]]. Decode
-    * attempts stay ≡ the kept image census — the SAME
-    * `graft.image_decode_attempts` accumulator counts them, now charged
-    * at the gate — and the thumbs are bit-identical to
-    * [[decodeAnyImages]]' (shared [[decodeAnyImageBytes]] dispatch +
-    * [[thumbnailOf]]). `thumb` is NULL for non-images, gated-out blobs,
-    * and kept images whose decode refuses (those keep routing to exact
-    * blob dedup, the undecodable discipline). Returns (media_id, bytes,
-    * modality, gate, thumb). */
   /** One blob's fused decode-to-thumbnail attempt — the SHARED body of
     * every fused gate+decode walk (extracted so a change to attempt
     * counting, exception handling, or orientation can never
@@ -1876,6 +1862,21 @@ object Multimodal {
     } catch { case _: Exception => null }
   }
 
+  /** [[mediaMetaGate]] fused with the KEPT image cohort's pixel decode
+    * (round 20, guide §8 "move big rows once"): the gate already streams
+    * every payload byte past the header walk, so decoding the kept
+    * images' thumbnails IN THE SAME PASS removes the second full read of
+    * the image cohort's bytes (and the separate decode job) that
+    * [[gatedMediaDedup]] used to pay in [[routedImageDedup]]. Decode
+    * attempts stay ≡ the kept image census — the SAME
+    * `graft.image_decode_attempts` accumulator counts them, now charged
+    * at the gate — and the thumbs are bit-identical to
+    * [[decodeAnyImages]]' (shared [[decodeAnyImageBytes]] dispatch +
+    * [[thumbnailOf]]). `thumb` is NULL for non-images, gated-out blobs,
+    * and kept images whose decode refuses (those keep routing to exact
+    * blob dedup, the undecodable discipline). Returns (media_id, bytes,
+    * modality, gate, thumb). The caller's checkpoint of this frame carries
+    * the thumbnails, so its size grows with `thumbSide`². */
   private[graft] def mediaMetaGateDecoding(media: DataFrame, minSide: Int,
       maxPixels: Long, minDurationMs: Long, maxDurationMs: Long,
       thumbSide: Int, autoOrient: Boolean): DataFrame = {
@@ -2837,7 +2838,9 @@ object Multimodal {
   /** [[routedMediaDedup]] over an already-classified (and checkpointed)
     * [[classifyMedia]] frame. ([[incrementalMediaDedup]] does NOT reuse
     * this body: it routes each cohort from a shared derived frame so the
-    * against-index probe reads the same decode — see there.) */
+    * against-index probe reads the same decode — see there.) A supplied
+    * `imageDec` is used as is: the caller's `thumbSide`, `flatEps` and
+    * `imageAutoOrient` must match the values the gate decoded with. */
   private def routedMediaDedupTagged(tagged: DataFrame, maxHamming: Int,
       maxBucketDf: Int, minMatchedFrames: Int, maxFrameDf: Int,
       thumbSide: Int, flatEps: Double, silenceFloor: Int,

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.sys.process._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Compression parity vs the reference engine (round-12 VERDICT item 3).
@@ -63,13 +62,7 @@ object CompressionBench {
     Files.createDirectories(work)
     Files.writeString(marker, "workdir of graft.tools.CompressionBench\n")
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val ev = graft.core.EventSource.events(spark, sfDir)
     val df = graft.core.TrailDB.fromEvents(ev,
@@ -175,17 +168,11 @@ object CompressionBench {
       Process(Seq("sh", "tools/refdump/build_bench.sh")).!
     require(Files.exists(Paths.get(benchBin)),
       s"$benchBin missing — run tools/refdump/build_bench.sh first")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the reader's parallelism tracks maxPartitionBytes like a parquet
-      // scan (round-8 decode ladder) — the 128 MB default would split a
-      // ~220 MB package into only 2 tasks on 32 cores
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
+    // the reader's parallelism tracks maxPartitionBytes like a parquet
+    // scan (round-8 decode ladder): 8 MB splits the ~220 MB package into
+    // enough tasks to keep 32 cores busy
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
 
     val ev = graft.core.EventSource.events(spark, sfDir)
     val maxU = ev.agg(max("user_id")).head().getLong(0) + 1L
@@ -247,7 +234,7 @@ object CompressionBench {
     println("|---|---|---|---|---|")
     println(f"| reference C (tdb-bench, 1 thread) | $cSec%.2f s | ${n / cSec / 1e6}%.1f M/s " +
       f"| $cProjSec%.2f s | ${n / cProjSec / 1e6}%.1f M/s |")
-    println(f"| graft tdb reader (local[32]) | $gSec%.2f s | ${n / gSec / 1e6}%.1f M/s " +
+    println(f"| graft tdb reader (${spark.sparkContext.master}) | $gSec%.2f s | ${n / gSec / 1e6}%.1f M/s " +
       f"| $gProjSec%.2f s | ${n / gProjSec / 1e6}%.1f M/s |")
     println("| encode path | wall | events/s |")
     println("|---|---|---|")

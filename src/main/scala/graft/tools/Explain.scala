@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected SparkEntry queries,
   * or (with `--audit`) a one-line-per-query plan summary: scans, pushed
   * filters, exchanges, broadcasts, codegen spans.
@@ -13,13 +11,7 @@ object Explain {
     val audit = args.contains("--audit")
     val names = if (args.length > 1 && !audit) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     if (audit) {
       // (whole-stage-codegen spans aren't visible pre-execution under AQE,
       // so they are deliberately not reported here)

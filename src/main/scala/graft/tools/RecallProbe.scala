@@ -12,12 +12,7 @@ import graft.ops.{Dedup, Similarity, TextAnalysis}
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     if (args.contains("--aniso")) { anisoWhiteningProbe(spark); return }
 

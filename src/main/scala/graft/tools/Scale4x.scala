@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling experiment: replicate documents/embeddings 4× (ids shifted, so
@@ -27,19 +27,16 @@ object Scale4x {
     val sfDir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.1")
     val x16 = args.contains("--x16")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val base = "/tmp/graft-scale4x"
     def time(f: => Long): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
+    // listener events arrive asynchronously after a job ends
+    def drainListeners(): Unit =
+      org.apache.spark.graft.Listeners.waitUntilEmpty(spark.sparkContext, 60000L)
     // Round 20 (VERDICT r19 items 1): shuffle-byte + degenerate-bucket
     // instrumentation for the banded-matcher and composed-gate ladders —
     // sf0.1/local[32] wall clock is planning-dominated (scaling ratios
@@ -86,7 +83,7 @@ object Scale4x {
       spark.sparkContext.addSparkListener(t)
       val t0 = System.nanoTime(); f
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // let the listener bus drain stage-completed events
+      drainListeners()
       spark.sparkContext.removeSparkListener(t)
       (wall, t.w.get, t.r.get, t.droppedBuckets, t.droppedSignatures)
     }
@@ -636,6 +633,7 @@ object Scale4x {
         // one key's partition (OptimizeSkewedJoin can't see through the
         // build side's aggregate) — only the salt can. The raw-partition
         // measurement shows that structure at ladder scale.
+        val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
         if (spanCorpus) {
           spark.conf.set("spark.sql.shuffle.partitions", "128")
           spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -643,12 +641,11 @@ object Scale4x {
         val tsAndMax = Seq(d1, wt(d1), big, wt(big)).map { d =>
           maxTask.max.set(0L)
           val t = time(op(d).queryExecution.toRdd.count())
-          // listener events drain asynchronously after the job ends
-          Thread.sleep(500)
+          drainListeners()
           (t, maxTask.max.get())
         }
         if (spanCorpus) {
-          spark.conf.set("spark.sql.shuffle.partitions", "32")
+          spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
           spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
         }
         val ts = tsAndMax.map(_._1)
@@ -1295,14 +1292,7 @@ object Scale4x {
         spark.sparkContext.addSparkListener(listener)
         try {
           val w = time(f)
-          var last = -1L
-          var stableFor = 0
-          var waited = 0
-          while (waited < 300 && stableFor < 10) {
-            Thread.sleep(100); waited += 1
-            val v = seen.values.map(_.get()).sum
-            if (v == last) stableFor += 1 else { stableFor = 0; last = v }
-          }
+          drainListeners()
           (w, seen.map { case (k, v) => k -> v.get() })
         } finally spark.sparkContext.removeSparkListener(listener)
       }

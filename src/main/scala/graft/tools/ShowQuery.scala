@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one SparkEntry query and print its rows — the quick loop
   * for measuring contract floors (recall, drop counts) before hard-coding
   * them into an invariant oracle.
@@ -11,13 +9,7 @@ object ShowQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ShowQuery <sfDir> <queryName>...")
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     args.drop(1).foreach { name =>
       println(s"===== $name @ $sfDir =====")
       graft.SparkEntry.queries(name)(spark, sfDir).show(100, truncate = false)

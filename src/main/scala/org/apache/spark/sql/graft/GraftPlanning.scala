@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic
   * `LogicalPlan` (graft.plans.AsOfJoinNode) as a DataFrame. Spark offers
   * no public API for this — every extension library that contributes
   * whole logical operators ships the same few-line shim in the
-  * `org.apache.spark.sql` namespace. Nothing else in the repo lives
+  * `org.apache.spark.sql` namespace. Apart from the listener-bus accessor
+  * `org.apache.spark.graft.Listeners`, nothing else in the repo lives
   * outside the `graft` package.
   */
 object GraftPlanning {

@@ -535,7 +535,7 @@ object SparkEntry {
         .sessionCounts(stream, gap = "30 minutes")
         .writeStream.outputMode("complete").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.sql(s"""SELECT uuid, count(*) AS num_sessions,
                 sum(n_events) AS num_events
                 FROM $name GROUP BY uuid ORDER BY uuid""")
@@ -2132,7 +2132,7 @@ object SparkEntry {
       val q = graft.streaming.StreamDedup.keepFirst(keyed)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       val kept = s.table(name)
       val corpus = s.read.parquet(src)
         .select(md5(col("text")).as("key"), col("id"))
@@ -2967,7 +2967,7 @@ object SparkEntry {
       val q = graft.streaming.StreamSessions.streamingImageNearDup(stream, index)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.table(name)
         .select(col("media_id"), col("match_id"), col("n_diff_ch"))
         .orderBy("media_id")
@@ -3120,7 +3120,7 @@ object SparkEntry {
       val q = graft.streaming.StreamSessions.streamingAudioNearDup(stream, index)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.table(name)
         .select(col("media_id"), col("match_id"), col("hamming"),
           col("n_diff_words"))
@@ -3162,7 +3162,7 @@ object SparkEntry {
       val q = graft.streaming.StreamSessions.streamingVideoNearDup(stream, index)
         .writeStream.outputMode("update").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.table(name)
         .select(col("media_id"), col("match_id"), col("n_matched"),
           col("lis"))
@@ -3252,7 +3252,7 @@ object SparkEntry {
           b.write.mode("append").parquet(out)
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.read.parquet(out).orderBy("media_id", "match_id", "kind")
     }),
 
@@ -3310,7 +3310,7 @@ object SparkEntry {
           b.write.mode("append").parquet(out)
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
+      graft.streaming.StreamSessions.awaitDrained(q, 180000)
       s.read.parquet(out).orderBy("media_id", "match_id", "kind")
     }),
 

@@ -3,8 +3,11 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Single-file `.tdb` PACKAGE writer (SURVEY §2 S2) — emits a format-v1
@@ -22,11 +25,17 @@ import org.apache.spark.sql.functions._
   * groupBy → the deterministic top-4096 candidate cut), and the encode
   * itself (a lazy per-trail iterator, nothing buffers past one trail).
   * Only ASSEMBLY is driver-side, inherently: the format is one
-  * sequential tar, so the driver drains compact per-trail byte blocks
-  * in partition order (the encoded stream is ~17 B/event — far smaller
-  * than the rows) and concatenates data/toc/uuids. The hard cap is the
-  * tar size-field limit anyway; the in-memory caps below guard the
-  * driver's assembly buffers, same bound as before.
+  * sequential tar, so the driver drains compact per-partition byte
+  * blocks (the encoded stream is ~17 B/event — far smaller than the
+  * rows) and concatenates data/toc/uuids in global trail order. The hard
+  * cap is the tar size-field limit anyway; the in-memory caps below
+  * guard the driver's assembly buffers, same bound as before.
+  *
+  * SEVEN SPARK JOBS per package: the input shuffle and its
+  * DISK_ONLY cache (2), the fused lexicon distinct and one job reading
+  * it (2), the model aggregate and its one collect (2), and one job that
+  * encodes every partition and hands each block to the driver as its
+  * task finishes (1). Nothing but the input cache is persisted.
   *
   * Encoding: HUFFMAN-CODED v1 streams by default (round 7; literal-only
   * before). Item frequencies are counted during the metadata pass, the
@@ -58,8 +67,9 @@ import org.apache.spark.sql.functions._
   *  - events within a trail ordered by time (ties by seq for determinism;
   *    the reference's qsort is unstable on ties, src/tdb_encode.c:106)
   *  - NULL and empty-string values both encode as value id 0 (NULL)
-  *  - lexicon ids assigned in lexicographic value order (the reference
-  *    uses insertion order; any consistent order is format-valid)
+  *  - lexicon ids assigned in UTF-8 byte order of the values (the
+  *    reference uses insertion order; any consistent order is
+  *    format-valid)
   */
 object TdbWriter {
 
@@ -168,56 +178,15 @@ object TdbWriter {
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
     // guard throws (lexicon/timestamp caps, drain refusals, failed
-    // encode jobs) must not strand DISK_ONLY blocks for the app's
-    // lifetime — every cached frame unpersists on EVERY exit
-    // (idempotent with the happy-path unpersists inside)
-    var taggedRef: DataFrame = null
-    var encodedRef: org.apache.spark.sql.Dataset[_] = null
+    // encode jobs) must not strand the DISK_ONLY blocks for the app's
+    // lifetime — the one cached frame unpersists on EVERY exit
     try {
-
-      // lexicons: distinct non-null non-empty values per field, sorted.
-      // ONE pass over the big cache builds the fused (field, value)
-      // distinct frame (a DISK_ONLY cache pass deserializes full rows
-      // whatever is selected, so per-field passes would each pay the whole
-      // deserialize); the per-field sorted collects then run over the
-      // SMALL cached distinct frame. Each collect is capped (cap+1 via
-      // TakeOrdered, so driver memory is bounded BEFORE the refusal fires
-      // — never "count then re-collect", which would double-scan, and
-      // never an uncapped collect that OOMs first and refuses never).
-      val lexicons: Array[Array[String]] =
-        if (fieldNames.isEmpty) Array.empty
-        else {
-          val fvDistinct = sortable.select(explode(array(
-              fieldNames.zipWithIndex.map { case (f, i) =>
-                struct(lit(i).as("fi"), col(f).as("v")) }: _*)).as("e"))
-            .select(col("e.fi").as("fi"), col("e.v").as("v"))
-            .filter(col("v").isNotNull && col("v") =!= "")
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          try fieldNames.zipWithIndex.map { case (f, i) =>
-            val vals = fvDistinct.filter(col("fi") === i).select(col("v"))
-              .orderBy("v").limit(
-                (math.min(maxLexiconValues, Int.MaxValue - 1L) + 1L).toInt)
-              .collect().map(_.getString(0))
-            if (vals.length > maxLexiconValues)
-              throw graft.core.GraftError.LexiconTooLarge(
-                s"tdb export: field '$f' has more than $maxLexiconValues " +
-                  "distinct values — the single-file .tdb format packs the " +
-                  "whole lexicon into one driver-resident section, so this " +
-                  "export would not fit. Raise maxLexiconValues explicitly " +
-                  "if the driver has the memory, or keep the db in the " +
-                  "parquet 'dir' layout (no lexicon bound).")
-            vals
-          }.toArray
-          finally fvDistinct.unpersist()
-        }
-      val valId: Array[Map[String, Long]] = lexicons.map(
-        _.zipWithIndex.map { case (v, i) => v -> (i + 1L) }.toMap)
-      // broadcast the value→id maps once — the model and encode walks both
-      // need them on executors (re-shipping 2^22-value maps per task
-      // closure would dominate small-task time)
       val nF = fieldNames.length
-      val bcValId = spark.sparkContext.broadcast(valId)
+      val lexicons = readLexicons(sortable, fieldNames, maxLexiconValues)
+      // broadcast the sorted value arrays once — the model and encode
+      // walks both need value → id maps on executors, which each executor
+      // builds once per broadcast (LexiconIds.ids), not per task or row
+      val bcLex = spark.sparkContext.broadcast(new LexiconIds(lexicons))
 
       // pass 1 (DISTRIBUTED model + metadata, ONE walk): each partition
       // replays the edge-encoding walk the encode pass will do, emitting
@@ -231,18 +200,20 @@ object TdbWriter {
       //    new items stop being admitted (compression degrades gracefully,
       //    correctness never).
       //  - kind 1: per-partition metadata (events, trails, min/max ts,
-      //    intra-trail max delta, max first-event ts), keyed uniquely by
-      //    (stat id, partition id) so the shared sum-aggregate passes each
-      //    value through untouched.
-      // ONE groupBy aggregates both; the tiny result is cached for its two
-      // consumers (stats collect + the deterministic top-4096 candidate
-      // cut: count ≥ 2, (-count, lo, hi) order — buildCodes' former
-      // driver-side cut, computed where the data is).
+      //    intra-trail max delta, max first-event ts), keyed by stat id.
+      // ONE groupBy aggregates both: symbol counts, events and trails by
+      // sum, the minimum timestamp by min, the other stats by max (never
+      // a sum of timestamps, which can overflow under ANSI). ONE collect
+      // then fetches the six stat rows (kind 1 sorts first) and the
+      // deterministic top-4096 candidate cut: count ≥ 2, (-count, lo, hi)
+      // order — buildCodes' former driver-side cut, computed where the
+      // data is.
       val compressL = compress
       val bigramsL = bigrams
-      val tagged = sortable.mapPartitions { it =>
-        val valIdL = bcValId.value
-        val pid = org.apache.spark.TaskContext.getPartitionId().toLong
+      val isMin = col("kind") === 1 && col("lo") === 2L
+      val isMax = col("kind") === 1 && col("lo") >= 3L
+      val modelRows = sortable.mapPartitions { it =>
+        val ids = bcLex.value.ids
         // primitive open-addressing counter: the boxed HashMap version
         // cost ~120 B/entry (~0.5 GB of untracked task heap at the cap,
         // OOM-prone under concurrent tasks); this is 24 B/slot, grown by
@@ -276,8 +247,7 @@ object TdbWriter {
           var firstChanged = -1L
           var f = 0
           while (f < nF) {
-            val s = r.getString(3 + f)
-            val v = if (s == null || s.isEmpty) 0L else valIdL(f)(s)
+            val v = valueId(ids(f), r.getString(3 + f))
             if (v != prevVals(f + 1)) {
               val item = TdbFormat.makeItem(f + 1, v)
               if (firstChanged == -1L) firstChanged = item
@@ -299,37 +269,34 @@ object TdbWriter {
           .map { case (l, h, c) => (0, l, h, c) }
         val statRows =
           if (events == 0) Iterator.empty
-          else Iterator((1, 0L, pid, events), (1, 1L, pid, trails),
-            (1, 2L, pid, mn), (1, 3L, pid, mx), (1, 4L, pid, mxd),
-            (1, 5L, pid, mxFirst))
+          else Iterator((1, 0L, 0L, events), (1, 1L, 0L, trails),
+            (1, 2L, 0L, mn), (1, 3L, 0L, mx), (1, 4L, 0L, mxd),
+            (1, 5L, 0L, mxFirst))
         freqRows ++ statRows
       }.toDF("kind", "lo", "hi", "cnt")
-        .groupBy("kind", "lo", "hi").agg(sum("cnt").as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      taggedRef = tagged
-      val statRows = tagged.filter(col("kind") === 1).collect()
-        .map(r => (r.getLong(1), r.getLong(3)))
-      def statAgg(id: Long, fold: (Long, Long) => Long, empty: Long): Long = {
-        val vs = statRows.filter(_._1 == id).map(_._2)
-        if (vs.isEmpty) empty else vs.reduce(fold)
-      }
-      val numEvents = statAgg(0, _ + _, 0L)
-      val numTrails = statAgg(1, _ + _, 0L)
-      var minTs = statAgg(2, math.min, 0L)
-      var maxTs = statAgg(3, math.max, 0L)
-      var maxDelta = statAgg(4, math.max, 0L)
-      if (numEvents > 0) {
-        val maxFirstTs = statAgg(5, math.max, Long.MinValue)
-        if (maxFirstTs - minTs > maxDelta) maxDelta = maxFirstTs - minTs
-      }
+        .groupBy("kind", "lo", "hi")
+        .agg(coalesce(min(when(isMin, col("cnt"))),
+          max(when(isMax, col("cnt"))),
+          sum(when(!isMin && !isMax, col("cnt")))).as("cnt"))
+        .filter(col("kind") === 1 || col("cnt") >= 2L)
+        .orderBy(col("kind").desc, col("cnt").desc, col("lo"), col("hi"))
+        .limit(4096 + StatCount)
+        .collect()
+      // stat id → value; every partition with events emits all six, so
+      // they are all present or (no events at all) all absent
+      val stats = new Array[Long](StatCount)
       val freqs = new java.util.HashMap[(Long, Long), Long]()
-      if (compress)
-        tagged.filter(col("kind") === 0 && col("cnt") >= 2)
-          .orderBy(col("cnt").desc, col("lo"), col("hi"))
-          .limit(4096)
-          .collect()
-          .foreach(r => freqs.put((r.getLong(1), r.getLong(2)), r.getLong(3)))
-      tagged.unpersist()
+      modelRows.foreach { r =>
+        if (r.getInt(0) == 1) stats(r.getLong(1).toInt) = r.getLong(3)
+        else freqs.put((r.getLong(1), r.getLong(2)), r.getLong(3))
+      }
+      val numEvents = stats(0)
+      val numTrails = stats(1)
+      val minTs = stats(2)
+      val maxTs = stats(3)
+      var maxDelta = stats(4)
+      if (numEvents > 0 && stats(5) - minTs > maxDelta)
+        maxDelta = stats(5) - minTs
       val codeMap = buildCodes(freqs)
       // v0 codebook symbols are u64 (two 32-bit item halves) — a code for a
       // wide item or a wide-item bigram cannot be represented, so such
@@ -369,17 +336,15 @@ object TdbWriter {
       // literal) — and emits ONE compact block per partition: the
       // concatenated trail bit-streams (the package's own ~17 B/event
       // density, NOT the rows), per-trail byte lengths, and the raw
-      // 16-byte uuids. persist + count materializes every partition IN
-      // PARALLEL (toLocalIterator alone would run one partition-sized job
-      // at a time, serializing the very work this distributes); the drain
-      // then fetches ≤numPartitions cached blocks.
+      // 16-byte uuids. ONE job encodes every partition IN PARALLEL and
+      // drains its block to the driver as the task finishes.
       val bcCodeMap = spark.sparkContext.broadcast(codeMap)
       val fieldIdBitsE = fieldIdBits
       val fieldBitsE = fieldBits
       val minTsE = minTs
-      val encoded = sortable.mapPartitions { it =>
+      val encode: Iterator[Row] => Block = { it =>
         val cm = bcCodeMap.value
-        val valIdL = bcValId.value
+        val ids = bcLex.value.ids
         def unigram(field: Int, value: Long): (Int, Int) = {
           val code = cm.get((TdbFormat.makeItem(field, value), 0L))
           // code only when it is SHORTER than the literal for this field —
@@ -411,7 +376,7 @@ object TdbWriter {
               "would corrupt every entry after it")
         val data = new ByteArrayOutputStream()
         val uuids = new ByteArrayOutputStream()
-        val lens = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val lens = ArrayBuffer.empty[Int]
         var curUuid: String = null
         var prevTs = 0L
         val prevVals = new Array[Long](nF + 1)
@@ -456,8 +421,7 @@ object TdbWriter {
           var nCh = 0
           var f = 0
           while (f < nF) {
-            val s = r.getString(3 + f)
-            val v = if (s == null || s.isEmpty) 0L else valIdL(f)(s)
+            val v = valueId(ids(f), r.getString(3 + f))
             if (v != prevVals(f + 1)) {
               chF(nCh) = f + 1; chV(nCh) = v; nCh += 1
               prevVals(f + 1) = v
@@ -477,43 +441,46 @@ object TdbWriter {
           while (c < nCh) { emit(chF(c), chV(c)); c += 1 }
         }
         flushTrail()
-        if (lens.isEmpty) Iterator.empty
-        else Iterator.single((uuids.toByteArray, lens.toArray, data.toByteArray))
-      }.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      encodedRef = encoded
-      encoded.count() // parallel materialization of every partition's encode
+        if (lens.isEmpty) null
+        else (uuids.toByteArray, lens.toArray, data.toByteArray)
+      }
 
-      // driver-side ASSEMBLY, the format's inherent single stream: fetch
-      // the compact per-partition blocks, then restore GLOBAL trail order
-      // with one driver merge-sort over the uuid keys: v1 orders by the
-      // uuid's little-endian u128 value (compare raw bytes reversed), v0
-      // by hex string == raw byte order. The drain cap is 768 MiB: the
-      // ordered dataBuf/uuidBuf below are a SECOND full copy of the
-      // blocks, so peak driver memory is ~2× the cap — 1.5 GiB total,
-      // refused LOUDLY rather than dying in ByteArrayOutputStream's array
-      // growth near Int.MaxValue (uuids at 16 B/trail can hit the limit
-      // first on many-tiny-trail corpora).
-      val blocks = scala.collection.mutable.ArrayBuffer
-        .empty[(Array[Byte], Array[Int], Array[Byte])]
+      // driver-side ASSEMBLY, the format's inherent single stream: the
+      // job's result handler receives the compact per-partition blocks as
+      // their tasks finish, then the driver restores GLOBAL trail order
+      // with one merge-sort over the uuid keys: v1 orders by the uuid's
+      // little-endian u128 value (compare raw bytes reversed), v0 by hex
+      // string == raw byte order. The drain cap is 768 MiB: the ordered
+      // dataBuf/uuidBuf below are a SECOND full copy of the blocks, so
+      // peak driver memory is ~2× the cap — 1.5 GiB total, refused LOUDLY
+      // rather than dying in ByteArrayOutputStream's array growth near
+      // Int.MaxValue (uuids at 16 B/trail can hit the limit first on
+      // many-tiny-trail corpora). The handler only records a refusal (a
+      // throw there would surface as SparkDriverExecutionException) and
+      // keeps no block past it; the driver throws it after the job. All
+      // blocks travel in one job, so spark.driver.maxResultSize (1 GiB by
+      // default) also bounds their sum.
+      val rows = sortable.rdd
+      val blockAt = new Array[Block](rows.getNumPartitions)
+      var refusal: String = null
       locally {
         var dataBytes = 0L; var uuidBytes = 0L; var trailsSeen = 0L
-        val it = encoded.toLocalIterator()
-        while (it.hasNext) {
-          val b = it.next()
-          dataBytes += b._3.length.toLong
-          uuidBytes += b._1.length.toLong
-          trailsSeen += b._2.length.toLong
-          require(dataBytes < TdbWriter.DrainCapBytes &&
-            uuidBytes < TdbWriter.DrainCapBytes,
-            s"tdb package: trails.data ($dataBytes B) or uuids " +
-              s"($uuidBytes B) exceeds the 768 MiB in-memory writer " +
-              s"cap after $trailsSeen trails — export a sample " +
-              "(the parquet directory is the scale layout)")
-          blocks += b
-        }
+        spark.sparkContext.runJob(rows, encode, (pid: Int, b: Block) =>
+          if (b != null && refusal == null) {
+            dataBytes += b._3.length.toLong
+            uuidBytes += b._1.length.toLong
+            trailsSeen += b._2.length.toLong
+            if (dataBytes < TdbWriter.DrainCapBytes &&
+                uuidBytes < TdbWriter.DrainCapBytes) blockAt(pid) = b
+            else refusal =
+              s"tdb package: trails.data ($dataBytes B) or uuids " +
+                s"($uuidBytes B) exceeds the 768 MiB in-memory writer " +
+                s"cap after $trailsSeen trails — export a sample " +
+                "(the parquet directory is the scale layout)"
+          })
       }
-      encoded.unpersist()
-      sortable.unpersist()
+      require(refusal == null, refusal)
+      val blocks = blockAt.filter(_ != null)
       val totalTrails = blocks.map(_._2.length.toLong).sum
       require(totalTrails == numTrails,
         s"tdb package: encoded $totalTrails trails, metadata counted " +
@@ -666,12 +633,84 @@ object TdbWriter {
         }
         os.write(new Array[Byte](1024)) // end-of-archive blocks
       } finally os.close()
-    } finally {
-      sortable.unpersist()
-      if (taggedRef != null) taggedRef.unpersist()
-      if (encodedRef != null) encodedRef.unpersist()
-    }
+    } finally sortable.unpersist()
   }
+
+  /** One partition's encoded trails: raw 16-byte uuids, per-trail byte
+    * lengths, and the concatenated trail bit-streams. */
+  private type Block = (Array[Byte], Array[Int], Array[Byte])
+
+  /** Rows the model pass emits per partition for the metadata: events,
+    * trails, min ts, max ts, max intra-trail delta, max first-event ts. */
+  private final val StatCount = 6
+
+  /** Per-field lexicons: the distinct non-null non-empty values, in UTF-8
+    * byte order (the order `orderBy` gives a string column; String's
+    * UTF-16 compareTo orders supplementary characters differently). ONE
+    * pass over the big cache builds the fused (field, value) distinct
+    * frame (a DISK_ONLY cache pass deserializes full rows whatever is
+    * selected, so per-field passes would each pay the whole deserialize),
+    * and ONE job reads it: each partition ships at most cap+1 values per
+    * field, so driver memory is bounded BEFORE the refusal fires — never
+    * "count then re-collect", which would double-scan, and never an
+    * uncapped collect that OOMs first and refuses never. Partitions are
+    * disjoint after the distinct, so the driver concatenates and sorts. */
+  private def readLexicons(sortable: DataFrame, fieldNames: Seq[String],
+      maxLexiconValues: Long): Array[Array[String]] = {
+    if (fieldNames.isEmpty) return Array.empty
+    val nF = fieldNames.length
+    val fvDistinct = sortable.select(explode(array(
+        fieldNames.zipWithIndex.map { case (f, i) =>
+          struct(lit(i).as("fi"), col(f).as("v")) }: _*)).as("e"))
+      .select(col("e.fi").as("fi"), col("e.v").as("v"))
+      .filter(col("v").isNotNull && col("v") =!= "")
+      .distinct()
+    val keep = math.min(maxLexiconValues, Int.MaxValue - 1L).toInt + 1
+    val perField = Array.fill(nF)(ArrayBuffer.empty[Array[Byte]])
+    sortable.sparkSession.sparkContext.runJob(fvDistinct.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => {
+        val vals = Array.fill(nF)(ArrayBuffer.empty[Array[Byte]])
+        it.foreach { r =>
+          val b = vals(r.getInt(0))
+          if (b.length < keep) b += r.getUTF8String(1).getBytes
+        }
+        vals.map(_.toArray)
+      },
+      // past the cap the field is refused anyway: stop growing it
+      (_: Int, part: Array[Array[Array[Byte]]]) =>
+        part.indices.foreach(i =>
+          if (perField(i).length < keep) perField(i) ++= part(i)))
+    fieldNames.zip(perField).map { case (f, vals) =>
+      if (vals.length > maxLexiconValues)
+        throw graft.core.GraftError.LexiconTooLarge(
+          s"tdb export: field '$f' has more than $maxLexiconValues " +
+            "distinct values — the single-file .tdb format packs the " +
+            "whole lexicon into one driver-resident section, so this " +
+            "export would not fit. Raise maxLexiconValues explicitly " +
+            "if the driver has the memory, or keep the db in the " +
+            "parquet 'dir' layout (no lexicon bound).")
+      vals.toArray.sortWith(java.util.Arrays.compareUnsigned(_, _) < 0)
+        .map(new String(_, StandardCharsets.UTF_8))
+    }.toArray
+  }
+
+  /** The broadcast lexicons. Executors build the value → id maps from the
+    * sorted arrays once per broadcast (the lazy val is not serialized);
+    * ids are 1-based, 0 being NULL. */
+  private final class LexiconIds(values: Array[Array[String]])
+      extends Serializable {
+    @transient lazy val ids: Array[java.util.HashMap[String, java.lang.Long]] =
+      values.map { vs =>
+        val m = new java.util.HashMap[String, java.lang.Long](vs.length * 2)
+        vs.indices.foreach(i => m.put(vs(i), i + 1L))
+        m
+      }
+  }
+
+  /** A value's lexicon id: NULL and the empty string are both id 0. */
+  private def valueId(ids: java.util.HashMap[String, java.lang.Long],
+      s: String): Long =
+    if (s == null || s.isEmpty) 0L else ids.get(s)
 
   /** Minimal ustar header, field layout per the POSIX spec; magic matches
     * the reference packages' "ustar  \0" (old GNU) so headers byte-compare

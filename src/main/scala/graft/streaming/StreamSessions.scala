@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming extension (beyond reference parity — the reference is batch-
   * only with periodic shard shipping, doc/docs/index.md:43-48; its
@@ -15,6 +15,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    is O(active sessions), not O(history)
   */
 object StreamSessions {
+
+  /** Waits for a stream started with `Trigger.AvailableNow` to finish. A
+    * stream still running after `timeoutMs` is stopped and refused with a
+    * TimeoutException, and a stream that failed rethrows its error, so a
+    * caller never reads a partly written sink as the whole answer. */
+  def awaitDrained(q: StreamingQuery, timeoutMs: Long): Unit = {
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"stream ${q.name} did not finish within $timeoutMs ms; it was stopped")
+    }
+    q.exception.foreach(e => throw e)
+  }
 
   /** Per-(uuid, session) rollup over a streaming trail source.
     * `events` must be a streaming DataFrame with uuid + a timestamp column.

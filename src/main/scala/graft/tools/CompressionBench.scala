@@ -239,7 +239,7 @@ object CompressionBench {
     println("| encode path | wall | events/s |")
     println("|---|---|---|")
     println(f"| reference C recode (1 thread) | $cRecodeSec%.2f s | ${n / cRecodeSec / 1e6}%.2f M/s |")
-    println(f"| graft writePackage (driver-side export) | $wWrite%.2f s | ${n / wWrite / 1e6}%.2f M/s |")
+    println(f"| graft writePackage (export) | $wWrite%.2f s | ${n / wWrite / 1e6}%.2f M/s |")
     println(f"| graft finalizeTo (distributed parquet, production) | $gFinalizeSec%.2f s | ${n / gFinalizeSec / 1e6}%.2f M/s |")
     println(f"""{"metric":"decode_events_per_sec","n":$n,"c":${n / cSec},"graft":${n / gSec},"c_proj":${n / cProjSec},"graft_proj":${n / gProjSec},"c_recode":${n / cRecodeSec},"graft_pkg_write":${n / wWrite},"graft_finalize":${n / gFinalizeSec}}""")
     spark.stop()

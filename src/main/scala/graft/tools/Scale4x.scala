@@ -1223,7 +1223,7 @@ object Scale4x {
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination(600000)
+          graft.streaming.StreamSessions.awaitDrained(q, 600000)
           streamRows = spark.read.parquet(out).count()
           0L
         }

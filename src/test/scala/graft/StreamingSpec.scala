@@ -2126,4 +2126,31 @@ class StreamingSpec extends SparkSpec {
     assert(got("u1") === graft.agg.TrailSummary(10L, 99L, 2L))
     assert(got("u2") === graft.agg.TrailSummary(5L, 5L, 1L))
   }
+
+  test("awaitDrained stops and refuses a stream that outlives its timeout, rethrows a failed one") {
+    val dir = Files.createTempDirectory("graft-stream-await")
+    val src = dir.resolve("src").toString
+    Seq(1L, 2L, 3L).toDF("x").write.parquet(src)
+    def source = spark.readStream.schema(spark.read.parquet(src).schema)
+      .parquet(src)
+    // a processing-time stream never finishes on its own
+    val live = source.writeStream.format("noop")
+      .trigger(Trigger.ProcessingTime("1 second")).start()
+    val e = intercept[java.util.concurrent.TimeoutException](
+      StreamSessions.awaitDrained(live, 200))
+    assert(e.getMessage.contains("did not finish within 200 ms"), e.getMessage)
+    assert(!live.isActive, "the timed-out stream is still running")
+    // a stream whose batch fails surfaces the failure, not a short sink
+    val failing = source.writeStream
+      .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) =>
+        throw new IllegalStateException("batch exploded"))
+      .trigger(Trigger.AvailableNow()).start()
+    val f = intercept[Exception](StreamSessions.awaitDrained(failing, 60000))
+    assert(f.getMessage.contains("batch exploded"), f.getMessage)
+    // a stream that drains returns normally
+    val ok = source.writeStream.format("noop")
+      .trigger(Trigger.AvailableNow()).start()
+    StreamSessions.awaitDrained(ok, 60000)
+    assert(!ok.isActive)
+  }
 }

@@ -528,25 +528,129 @@ class TdbSourceSpec extends SparkSpec {
   test("export refuses a field lexicon past maxLexiconValues instead of collecting it (r9 item 7)") {
     val dir = Files.createTempDirectory("graft-tdb-lexcap")
     // 'tag' has 12 distinct values; 'etype' has 2 — a cap of 10 must name
-    // the offending FIELD and never OOM first (the collect itself is
-    // capped at cap+1 via TakeOrdered)
+    // the offending FIELD and never OOM first (each partition ships at
+    // most cap+1 values per field). The second run keeps every shuffle
+    // partition (no AQE coalescing) on a repartitioned input, so the
+    // over-cap field reaches the driver spread over several partitions.
+    // Neither the refusal nor the export strands a cached RDD.
+    val sc = spark.sparkContext
     val df = (0 until 24).map(i =>
         (f"${i % 3}%032x", 100L + i, s"e${i % 2}", s"t${i % 12}"))
       .toDF("uuid", "time", "etype", "tag")
-    val e = intercept[graft.core.GraftError] {
-      TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/capped.tdb",
-        maxLexiconValues = 10)
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    for ((input, spread) <- Seq(df -> false, df.repartition(4) -> true)) try {
+      if (spread) spark.conf.set(coalesce, "false")
+      val cached = sc.getPersistentRDDs.keySet
+      val e = intercept[graft.core.GraftError] {
+        TdbWriter.writePackage(input, Seq("etype", "tag"), s"$dir/capped.tdb",
+          maxLexiconValues = 10)
+      }
+      assert(e.errName === "TDB_ERR_LEXICON_TOO_LARGE")
+      assert(e.getMessage.contains("'tag'") &&
+        e.getMessage.contains("10"), e.getMessage)
+      assert(sc.getPersistentRDDs.keySet === cached, "refusal leaked a cache")
+      // at exactly the cardinality the export proceeds and round-trips
+      val out = s"$dir/fits.tdb"
+      TdbWriter.writePackage(input, Seq("etype", "tag"), out,
+        maxLexiconValues = 12)
+      assert(sc.getPersistentRDDs.keySet === cached, "export leaked a cache")
+      val back = spark.read.format("tdb").load(out)
+      assert(back.count() === 24L)
+      assert(back.select("tag").distinct().count() === 12L)
+    } finally spark.conf.unset(coalesce)
+  }
+
+  /** A fixed multi-partition frame: 9 trails, repeated timestamps split
+    * by `seq`, NULL and empty values, and values repeated often enough to
+    * earn unigram and bigram codes. */
+  private def goldenFrame = {
+    val rnd = new scala.util.Random(20261017)
+    (0 until 600).map { i =>
+      val t = rnd.nextInt(9)
+      (f"${t * 0x1234567L}%032x", 1000L + (i / 9) * 60L + rnd.nextInt(2),
+        i.toLong, Seq("view", "click", "buy", "")(rnd.nextInt(4)),
+        if (rnd.nextInt(6) == 0) null else s"p${rnd.nextInt(5)}",
+        if (rnd.nextInt(40) == 0) s"rare$i" else "common")
+    }.toDF("uuid", "time", "seq", "etype", "page", "tag").repartition(3)
+  }
+
+  private def sha256(chunks: Seq[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    chunks.foreach(b => md.update(b))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  test("golden bytes: the writer's packages keep their SHA-256") {
+    // pins the exact output of every writer mode, so a change to how the
+    // writer schedules its work can prove it left the bytes alone
+    val dir = Files.createTempDirectory("graft-tdb-golden")
+    val df = goldenFrame
+    val fields = Seq("etype", "page", "tag")
+    def pkg(name: String)(write: String => Unit): String = {
+      val out = s"$dir/$name.tdb"
+      write(out)
+      sha256(Seq(Files.readAllBytes(java.nio.file.Paths.get(out))))
     }
-    assert(e.errName === "TDB_ERR_LEXICON_TOO_LARGE")
-    assert(e.getMessage.contains("'tag'") &&
-      e.getMessage.contains("10"), e.getMessage)
-    // at exactly the cardinality the export proceeds and round-trips
-    val out = s"$dir/fits.tdb"
-    TdbWriter.writePackage(df, Seq("etype", "tag"), out,
-      maxLexiconValues = 12)
-    val back = spark.read.format("tdb").load(out)
-    assert(back.count() === 24L)
-    assert(back.select("tag").distinct().count() === 12L)
+    assert(pkg("default")(TdbWriter.writePackage(df, fields, _)) ===
+      "205b796222af940b554c053b9924df1dce37ad40516caa028b3ca2084207744d")
+    assert(pkg("literal")(TdbWriter.writePackage(df, fields, _,
+      compress = false)) ===
+      "f9ddc5bc74af9035b372c47b3e1731553216afac5601000ec7c46e810390079e")
+    assert(pkg("unigram")(TdbWriter.writePackage(df, fields, _,
+      bigrams = false)) ===
+      "b08f53178aa1fc402b20ee67619f3e987bfdb346afeaaf1d58cd958ff23b91a2")
+    val v0 = dir.resolve("v0")
+    TdbWriter.writeV0Directory(df, fields, v0.toString)
+    val members = Files.list(v0).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).sorted
+    assert(members.toSeq === Seq("cookies", "fields", "info", "lexicon.etype",
+      "lexicon.page", "lexicon.tag", "trails.codebook", "trails.data",
+      "trails.toc"))
+    assert(sha256(members.toSeq.flatMap(m =>
+      Seq(m.getBytes("UTF-8"), Files.readAllBytes(v0.resolve(m))))) ===
+      "a185cc9a77bc28d1262632db1ba9b2ef1b19cabcca9da3b61447ce2f11e06c0f")
+  }
+
+  test("lexicon ids follow UTF-8 byte order, not UTF-16 String order") {
+    // String.compareTo puts U+FFFD after the surrogate pair of U+1F600;
+    // their UTF-8 bytes (EF BF BD < F0 9F 98 80) order them the other way
+    val u = "cd" * 16
+    val values = Seq("\uFFFD", "\uD83D\uDE00", "\u00e9", "z")
+    val dir = Files.createTempDirectory("graft-tdb-utf8order")
+    val out = s"$dir/order.tdb"
+    TdbWriter.writePackage(values.zipWithIndex
+      .map { case (v, i) => (u, i.toLong, v) }.toDF("uuid", "time", "k"),
+      Seq("k"), out)
+    val lex = graft.sources.TdbItems.lexiconDf(spark, out, "k")
+      .orderBy("val_id").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(lex.toSeq === Seq(1L -> "z", 2L -> "\u00e9", 3L -> "\uFFFD",
+      4L -> "\uD83D\uDE00"))
+    val back = spark.read.format("tdb").load(out).orderBy("time")
+      .collect().map(_.getString(2))
+    assert(back.toSeq === values)
+  }
+
+  test("writePackage runs at most 8 Spark jobs") {
+    // the writer's passes: the input shuffle and its cache, one lexicon
+    // read, one model aggregate and collect, and one encode-and-drain job
+    val sc = spark.sparkContext
+    val df = (0 until 200).map(i =>
+        (f"${i % 17}%032x", 100L + i, s"e${i % 3}", s"t${i % 7}"))
+      .toDF("uuid", "time", "etype", "tag")
+    val dir = Files.createTempDirectory("graft-tdb-jobs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
+    sc.addSparkListener(listener)
+    try {
+      TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/jobs.tdb")
+      org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 8, s"writePackage ran ${jobs.get()} jobs")
   }
 
   test("wide timestamps: the export refuses past TDB_MAX_TIMEDELTA, fits just under (tests/c-tests/wide_timestamps.c)") {

@@ -52,7 +52,7 @@ object Bench {
     // An sf dir without documents skips this warm-up; any other failure
     // is real and stops the bench.
     try {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = graft.core.ParquetInputs.read(spark, s"$sfDir/documents.parquet")
       docs.select(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.length(
           org.apache.spark.sql.functions.col("text")))).collect()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.{TrailDB, TrailOps, TrailSchema}
+import graft.core.{ParquetInputs, TrailDB, TrailOps, TrailSchema}
 import graft.filter.{Clause, EventFilter, Match, TimeRange}
 import graft.agg.Sessionize
 import graft.ops.{Bpe, Dedup, Mining, Multimodal, Retrieval, Similarity, Sketch, TextAnalysis}
@@ -93,7 +93,7 @@ object SparkEntry {
         val p = java.nio.file.Files.createTempDirectory("graft-fix")
           .resolve("ivfpq").toString
         Similarity.buildIvfPqIndex(
-          s.read.parquet(s"$dir/embeddings.parquet"), p,
+          ParquetInputs.read(s, s"$dir/embeddings.parquet"), p,
           nCells = 16, m = 16, codebookK = 32, opq = true)
         p
       }
@@ -107,7 +107,7 @@ object SparkEntry {
       memo(s"ivfpqdrift:$dir") {
         val p = java.nio.file.Files.createTempDirectory("graft-fix")
           .resolve("ivfpq-drift").toString
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
         val n = emb.count()
         Similarity.buildIvfPqIndex(emb, p, nCells = 16, m = 16,
           codebookK = 32)
@@ -132,7 +132,7 @@ object SparkEntry {
         val root = java.nio.file.Files.createTempDirectory("graft-fix")
           .toString
         val idx = s"$root/ivfpq-rebuild"
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
         val n = emb.count()
         Similarity.buildIvfPqIndex(emb, idx, nCells = 16, m = 16,
           codebookK = 32)
@@ -217,7 +217,7 @@ object SparkEntry {
     mediaMemo(s, s"mixedformat:$dir")(mixedFormatCorpusBuild(s, dir))
 
   private def mixedFormatCorpusBuild(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
     def off(df: DataFrame, o: Long) = df.select(
       (col("media_id") + lit(o)).as("media_id"), col("bytes"))
     Multimodal.jpegMediaFromDocuments(docs)
@@ -253,7 +253,7 @@ object SparkEntry {
       build.write.parquet(path)
       path
     }
-    s.read.parquet(p)
+    ParquetInputs.read(s, p)
   }
 
   /** Memoized planted-media fixture from the documents table — every
@@ -265,7 +265,7 @@ object SparkEntry {
   private def docFixture(s: SparkSession, dir: String, key: String)(
       build: DataFrame => DataFrame): DataFrame =
     mediaMemo(s, s"$key:$dir")(
-      build(s.read.parquet(s"$dir/documents.parquet")))
+      build(ParquetInputs.read(s, s"$dir/documents.parquet")))
 
   /** Planted MIXED-media corpus — each modality's dedup fixture at its
     * id offset, a byte-identical unknown-magic cohort, a CORRUPT
@@ -291,12 +291,12 @@ object SparkEntry {
     val mixed = mixedMediaFixture(s, dir)
     mediaMemo(s, s"gatedmedia:$dir") {
       mixed.unionByName(
-        Multimodal.junkMediaFixture(s.read.parquet(s"$dir/documents.parquet")))
+        Multimodal.junkMediaFixture(ParquetInputs.read(s, s"$dir/documents.parquet")))
     }
   }
 
   private def mixedMediaFixtureBuild(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
     val img = Multimodal.dedupImageMediaFromDocuments(docs)
       .select("media_id", "bytes")
     val aud = Multimodal.dedupAudioMediaFromDocuments(docs)
@@ -359,8 +359,8 @@ object SparkEntry {
       Multimodal.blobMd5Index(tagged).write.parquet(s"$r/blob")
       r
     }
-    (s.read.parquet(s"$root/img"), s.read.parquet(s"$root/aud"),
-      s.read.parquet(s"$root/vid"), s.read.parquet(s"$root/blob"))
+    (ParquetInputs.read(s, s"$root/img"), ParquetInputs.read(s, s"$root/aud"),
+      ParquetInputs.read(s, s"$root/vid"), ParquetInputs.read(s, s"$root/blob"))
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
@@ -528,17 +528,18 @@ object SparkEntry {
         p
       }
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val name = "t_stream_sess_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val q = graft.streaming.StreamSessions
         .sessionCounts(stream, gap = "30 minutes")
         .writeStream.outputMode("complete").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.sql(s"""SELECT uuid, count(*) AS num_sessions,
-                sum(n_events) AS num_events
-                FROM $name GROUP BY uuid ORDER BY uuid""")
+      graft.streaming.StreamSessions.drainMemorySink(q, 180000) {
+        s.sql(s"""SELECT uuid, count(*) AS num_sessions,
+                  sum(n_events) AS num_events
+                  FROM $name GROUP BY uuid ORDER BY uuid""")
+      }
     }),
 
     // §2.10a: the per-trail cursor API (tdb_get_trail + tdb_cursor_next
@@ -734,7 +735,7 @@ object SparkEntry {
     "t_metadata_rule" -> ((s, dir) => {
       val path = Fixtures.dbPath(s, dir)
       graft.plans.MetadataOnlyAggRule.registerWith(s)
-      val agg = s.read.parquet(path).agg(
+      val agg = ParquetInputs.read(s, path).agg(
         countDistinct(col("uuid")).as("num_trails"),
         count(lit(1)).as("num_events"),
         min("time").as("min_time"),
@@ -1009,12 +1010,12 @@ object SparkEntry {
 
     // Exact dedup groups: content hash → survivor id + copy count.
     "d_dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(s.read.parquet(s"$dir/documents.parquet"))
+      Dedup.exactGroups(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .orderBy("content_hash")),
 
     // Exact n-gram Jaccard near-dup pairs via inverted shingle index.
     "d_ngram_pairs" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.ngramJaccardPairs(ParquetInputs.read(s, s"$dir/documents.parquet"),
           k = 3, threshold = 0.2)
         .orderBy("id_a", "id_b")),
 
@@ -1022,7 +1023,7 @@ object SparkEntry {
     // trim as a pure projection — exact byte-for-byte DuckDB replay via
     // the Java∩RE2-portable \s class (the scrubPii discipline).
     "d_normalize" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val norm = TextAnalysis.normalizeText(col("text"))
       docs.select(col("doc_id"),
           length(col("text")).cast("long").as("n_before"),
@@ -1038,7 +1039,7 @@ object SparkEntry {
     // superset and verification is exact. Same oracle as d_containment:
     // the outputs are provably identical (also spec-enforced).
     "d_containment_prefix" -> ((s, dir) =>
-      Dedup.containmentPairsPrefix(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.containmentPairsPrefix(ParquetInputs.read(s, s"$dir/documents.parquet"),
           k = 3, threshold = 0.6)
         .orderBy("id_a", "id_b")),
 
@@ -1046,7 +1047,7 @@ object SparkEntry {
     // (Church & Hanks) with a count floor; pmi rounded to integral
     // micro-nats so the ranking (and the top-k cut) is engine-replayable.
     "d_pmi" -> ((s, dir) =>
-      Retrieval.pmiCollocations(s.read.parquet(s"$dir/documents.parquet"),
+      Retrieval.pmiCollocations(ParquetInputs.read(s, s"$dir/documents.parquet"),
         k = 20, minCount = 5)),
 
     // Leakage-safe eval split (round 8): split side decided by DEDUP
@@ -1056,7 +1057,7 @@ object SparkEntry {
     // Exact DuckDB replay: recursive-CTE clusters + the md5 split rule on
     // the cluster id.
     "d_cluster_split" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val clusters = Dedup.dedupClusters(docs,
         Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.2))
       Dedup.clusterSafeSplit(docs, clusters, evalFrac = 0.25)
@@ -1072,7 +1073,7 @@ object SparkEntry {
     // EVERY chunk shared (identical text ⇒ identical cuts ⇒ identical
     // chunk set), i.e. is_text_dup ⇒ shared_frac = 1.
     "d_cdc_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val stats = TextAnalysis.cdcSharedChunkStats(docs,
         w = 4, maskBits = 3, minSize = 4, maxSize = 24)
       val hashed = docs.select(col("doc_id"),
@@ -1093,7 +1094,7 @@ object SparkEntry {
     // one scores J ≈ |short|/|long| → 0 but containment 1). Same inverted-
     // index blocking as d_ngram_pairs; exact DuckDB replay.
     "d_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(s.read.parquet(s"$dir/documents.parquet"),
+      Dedup.containmentPairs(ParquetInputs.read(s, s"$dir/documents.parquet"),
           k = 3, threshold = 0.6)
         .orderBy("id_a", "id_b")),
 
@@ -1103,7 +1104,7 @@ object SparkEntry {
     // check run before committing to a vocab. Exact DuckDB replay,
     // including the tie-broken vocab boundary.
     "d_oov" -> ((s, dir) =>
-      TextAnalysis.vocabCoverage(s.read.parquet(s"$dir/documents.parquet"),
+      TextAnalysis.vocabCoverage(ParquetInputs.read(s, s"$dir/documents.parquet"),
           vocabSize = 20)
         .orderBy("doc_id")),
 
@@ -1124,7 +1125,7 @@ object SparkEntry {
       // as "at most one short chunk, and its id is the last id". Bounds
       // are shared vals so the flags can never drift from the call.
       val (minSz, maxSz) = (4, 24)
-      val ch = TextAnalysis.cdcChunks(s.read.parquet(s"$dir/documents.parquet"),
+      val ch = TextAnalysis.cdcChunks(ParquetInputs.read(s, s"$dir/documents.parquet"),
         w = 4, maskBits = 3, minSize = minSz, maxSize = maxSz)
       ch.groupBy("doc_id").agg(
           sum("n_tokens").as("n_tokens"),
@@ -1149,7 +1150,7 @@ object SparkEntry {
     // component; singletons are their own cluster). The keep-one-per-
     // cluster step of every corpus dedup pipeline.
     "d_dedup_clusters" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.2)
       Dedup.dedupClusters(docs, pairs).orderBy("doc_id")
     }),
@@ -1157,7 +1158,7 @@ object SparkEntry {
     // Canonical selection: near-dup clusters keep their LONGEST member
     // (quality-first keep policy, tie → min id) instead of min-id.
     "d_keep_best" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.2)
       val clusters = Dedup.dedupClusters(docs, pairs)
       Dedup.keepBest(
@@ -1170,7 +1171,7 @@ object SparkEntry {
 
     // Text quality signals (exact counts + IEEE-deterministic ratios).
     "d_quality" -> ((s, dir) =>
-      TextAnalysis.withQualitySignals(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.withQualitySignals(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .withColumn("n_bpe_est", TextAnalysis.bpeTokenEstimate(col("text")))
         .select("doc_id", "n_tokens", "n_bpe_est", "n_punct", "n_stopwords",
           "mean_token_len", "stopword_ratio", "punct_ratio")
@@ -1178,7 +1179,7 @@ object SparkEntry {
 
     // Language-ID heuristic (stopword argmax with fixed tie order).
     "d_langid" -> ((s, dir) =>
-      TextAnalysis.withLangId(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.withLangId(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .select("doc_id", "c_en", "c_de", "c_es", "c_fr", "lang_pred")
         .orderBy("doc_id")),
 
@@ -1186,7 +1187,7 @@ object SparkEntry {
     // corpus repeats — the boilerplate/template detector every corpus
     // cleanup runs (top repeated sentences with their doc spread).
     "d_sentence_dedup" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), explode(split(col("text"), "[.!?]+")).as("raw"))
         .select(col("doc_id"), trim(col("raw")).as("sentence"))
         .filter(length(col("sentence")) > 0)
@@ -1202,13 +1203,13 @@ object SparkEntry {
     // survivors in original order.
     "d_line_dedup" -> ((s, dir) =>
       TextAnalysis.dropRepeatedSentences(
-          s.read.parquet(s"$dir/documents.parquet"), minDocs = 2)
+          ParquetInputs.read(s, s"$dir/documents.parquet"), minDocs = 2)
         .orderBy("doc_id")),
 
     // Doc-length histogram: token-count deciles bucketed to 10s — the
     // length-distribution sanity check before/after filtering.
     "d_length_hist" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .select((floor(TextAnalysis.tokenCount(col("text")) / 10) * 10)
           .cast("long").as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_docs"))
@@ -1218,7 +1219,7 @@ object SparkEntry {
     // Synthetic PII is appended per doc so the redaction paths actually
     // fire; patterns stay in the Java-regex ∩ RE2 portable subset.
     "d_pii_scrub" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"),
           TextAnalysis.scrubPii(concat(col("text"),
             lit(" contact user"), col("doc_id").cast("string"),
@@ -1230,7 +1231,7 @@ object SparkEntry {
     // across runs/engines/cluster sizes, the standard corpus-downsampling
     // and train/held-out split primitive.
     "d_sample" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .filter(TextAnalysis.hashSample(col("text"), 0.25))
         .select("doc_id")
         .orderBy("doc_id")),
@@ -1240,7 +1241,7 @@ object SparkEntry {
     // order-independent content checksum — the layout + audit contract a
     // training job restarts from.
     "d_shard" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .withColumn("shard", TextAnalysis.shardAssign(col("text"), 16))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
@@ -1255,7 +1256,7 @@ object SparkEntry {
     // (Later rounds depend on earlier argmaxes — plain SQL cannot replay
     // them; the multi-round loop is spec-proven against a hand reference.)
     "d_bpe_pairs" -> ((s, dir) =>
-      Bpe.pairCounts(Bpe.wordSymbols(s.read.parquet(s"$dir/documents.parquet")))
+      Bpe.pairCounts(Bpe.wordSymbols(ParquetInputs.read(s, s"$dir/documents.parquet")))
         .orderBy(col("cnt").desc, col("sym_l"), col("sym_r")).limit(50)),
 
     // BPE ENCODE (the tokenizer-apply side of train): segment every doc
@@ -1269,7 +1270,7 @@ object SparkEntry {
       val merges = Seq(("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"),
         ("e", "r"), ("o", "n")).zipWithIndex
         .map { case ((a, b), i) => Bpe.BpeMerge(i + 1, a, b, 0L) }
-      Bpe.segment(s.read.parquet(s"$dir/documents.parquet"), merges)
+      Bpe.segment(ParquetInputs.read(s, s"$dir/documents.parquet"), merges)
         .select(col("doc_id"), explode(col("subwords")).as("sw"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_subwords"),
@@ -1282,7 +1283,7 @@ object SparkEntry {
     // primitive (vs the fractional stratified sampler).
     "d_eval_split" -> ((s, dir) =>
       TextAnalysis.takePerStratum(
-          s.read.parquet(s"$dir/documents.parquet"), n = 5)
+          ParquetInputs.read(s, s"$dir/documents.parquet"), n = 5)
         .select("doc_id", "lang")
         .orderBy("doc_id")),
 
@@ -1294,7 +1295,7 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-export")
         .resolve("shards").toString
       TextAnalysis.exportTrainingShards(
-          s.read.parquet(s"$dir/documents.parquet"), out, nShards = 16)
+          ParquetInputs.read(s, s"$dir/documents.parquet"), out, nShards = 16)
         .orderBy("shard")
     }),
 
@@ -1302,14 +1303,14 @@ object SparkEntry {
     // Lee et al. 2022): per doc, distinct 8-token windows shared with at
     // least one other doc + duplicated fraction.
     "d_dup_spans" -> ((s, dir) =>
-      Dedup.dupSpanStats(s.read.parquet(s"$dir/documents.parquet"), k = 8)
+      Dedup.dupSpanStats(ParquetInputs.read(s, s"$dir/documents.parquet"), k = 8)
         .orderBy("doc_id")),
 
     // End-to-end corpus pipeline: exact dedup (keep min id) → quality gate
     // → near-dup clustering on the survivors → keep one doc per cluster.
     // The composition every pre-training data pipeline runs, as ONE plan.
     "d_pipeline" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val s1 = Dedup.exactDedup(docs)
       val s2 = TextAnalysis.withQualitySignals(s1)
         .filter(col("n_tokens") >= 20 && col("n_tokens") <= 600 &&
@@ -1335,7 +1336,7 @@ object SparkEntry {
     // perplexity) or 'kept' — the "where did my data go" report, stage
     // semantics identical to d_training_pipeline's composition.
     "d_disposition" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val s1 = Dedup.exactDedup(docs)
       val s2 = TextAnalysis.withQualitySignals(s1)
         .filter(col("n_tokens") >= 20 && col("n_tokens") <= 600 &&
@@ -1349,7 +1350,7 @@ object SparkEntry {
     }),
 
     "d_training_pipeline" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val s1 = Dedup.exactDedup(docs)
       val s2 = TextAnalysis.withQualitySignals(s1)
         .filter(col("n_tokens") >= 20 && col("n_tokens") <= 600 &&
@@ -1371,19 +1372,19 @@ object SparkEntry {
     // TF-IDF top terms per doc: corpus IDF (one token-shuffle, 1-row
     // broadcast N) + per-doc top-k window.
     "d_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfidfTopTerms(s.read.parquet(s"$dir/documents.parquet"), topK = 5)
+      TextAnalysis.tfidfTopTerms(ParquetInputs.read(s, s"$dir/documents.parquet"), topK = 5)
         .orderBy("doc_id", "rank")),
 
     // Repetition signals (Gopher-style quality rules): duplicate-token
     // fraction, top-token share, top-bigram share.
     "d_repetition" -> ((s, dir) =>
-      TextAnalysis.withRepetitionSignals(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.withRepetitionSignals(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .orderBy("doc_id")),
 
     // Corpus vocabulary: top-50 tokens by frequency (explode + count —
     // the map-side-combined shape of every vocab/BPE-training pass).
     "d_vocab" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("freq"))
         .orderBy(col("freq").desc, col("token")).limit(50)),
@@ -1391,7 +1392,7 @@ object SparkEntry {
     // Quality-gate filter: the standard pre-training corpus pass — keep
     // docs inside token-count and stopword-ratio bounds.
     "d_quality_filter" -> ((s, dir) =>
-      TextAnalysis.withQualitySignals(s.read.parquet(s"$dir/documents.parquet"))
+      TextAnalysis.withQualitySignals(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .filter(col("n_tokens") >= 20 && col("n_tokens") <= 600 &&
           col("stopword_ratio") < 0.3 && col("punct_ratio") < 0.1)
         .select("doc_id", "n_tokens", "n_stopwords")
@@ -1407,7 +1408,7 @@ object SparkEntry {
     // tie mass); n_total is DuckDB-recomputed, n_kept is floored (≥
     // (1−q−ε)·n — ties at the threshold only ADD rows).
     "d_quantile_gate" -> ((s, dir) => {
-      val scored = s.read.parquet(s"$dir/documents.parquet")
+      val scored = ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("ntok"))
       TextAnalysis.quantileGateContract(scored, col("ntok"), q = 0.10)
         .select(col("n_total"),
@@ -1425,7 +1426,7 @@ object SparkEntry {
     // (b) every LSH pair is in the exact list (violations = 0), (c) recall
     // ≥ 0.7 (measured 1.0 at sf 0.001/0.01/0.1 — RecallProbe).
     "d_minhash_lsh" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val lsh = Dedup.minhashDedupPairs(docs, threshold = 0.2,
         numHashes = 64, bands = 32, k = 3).select("id_a", "id_b")
       // exact pair list is consumed twice (count + membership join)
@@ -1451,7 +1452,7 @@ object SparkEntry {
     // self-pairs must surface at hamming 0, and no emitted pair may exceed
     // maxHamming. DuckDB computes n_docs; the rest are exact equalities.
     "d_simhash" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         .select("doc_id", "text")
       val off = 1000000000L
       val corpus = docs.unionByName(
@@ -1473,7 +1474,7 @@ object SparkEntry {
     // forces: 1 ≤ |fp| ≤ max(n_sh − window + 1, 1), and fp ⊆ shingle
     // hashes (every fingerprint IS a window-min shingle hash).
     "d_fingerprint" -> ((s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(col("doc_id"), TextAnalysis.shingleHashes(col("text"), 5).as("_sh"))
         .select(col("doc_id"), col("_sh"),
           graft.functions.GraftFunctions.winnow(col("_sh"), 4).as("_fp"))
@@ -1488,7 +1489,7 @@ object SparkEntry {
 
     // Brute-force cosine top-k (exact ANN baseline).
     "e_knn_brute" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       Similarity.bruteForceKnn(emb, emb.filter(col("vec_id") < 10), k = 3)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
@@ -1504,7 +1505,7 @@ object SparkEntry {
     // floor 15 with margin. label_ok proves no result crosses the
     // predicate — the invariant the post-filter shape cannot state.
     "e_knn_ivf_filtered" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       val ann = Similarity.filteredIvfKnn(emb, q, k = 3, nCells = 16,
         nprobe = 8)
@@ -1529,7 +1530,7 @@ object SparkEntry {
     // inequality rides the broadcast-join filter below the mergeable
     // shortlist. Exact DuckDB replay.
     "e_hard_negatives" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 10), k = 3)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
@@ -1542,7 +1543,7 @@ object SparkEntry {
     // are off-predicate (Round8OpsSpec proves the divergence). Exact
     // DuckDB replay: join on label, rank by cosine.
     "e_knn_filtered" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       Similarity.filteredKnn(emb, emb.filter(col("vec_id") < 10), k = 3)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
@@ -1554,7 +1555,7 @@ object SparkEntry {
     // correction). Penalties are exact nano-unit integer sums, so the
     // DuckDB oracle replays every margin bit-for-bit.
     "e_bitext" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       Mining.bitextMine(emb.filter(col("label") === 0),
           emb.filter(col("label") === 1), k = 4)
         .orderBy("src_id")
@@ -1566,7 +1567,7 @@ object SparkEntry {
     // 55% (measured 76/73/63% at sf0.001/.01/.1 — strict same-best-partner
     // agreement), and the one-pair-per-source bound.
     "e_bitext_ann" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val a = emb.filter(col("label") === 0)
       val b = emb.filter(col("label") === 1)
       val exact = Mining.bitextMine(a, b, k = 4)
@@ -1602,7 +1603,7 @@ object SparkEntry {
     // with a recursive CTE over the same IEEE-double scores — selection
     // order, ids, and relevance all hash-match.
     "e_mmr" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       Similarity.mmrSelect(emb, emb.filter(col("vec_id") === 0),
           candidateN = 40, k = 10, lambda = 0.7)
         .orderBy("rank")
@@ -1620,7 +1621,7 @@ object SparkEntry {
     // DuckDB recomputes n_total.
     "e_semantic_dedup" -> ((s, dir) => {
       val thr = 0.35
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val res = Dedup.semanticDedup(emb, nCells = 8, threshold = thr)
         .localCheckpoint()
       val vecs = emb.select(col("vec_id"), col("embedding").as("_v"),
@@ -1665,7 +1666,7 @@ object SparkEntry {
     // refold cosine, and the selection independently replayed as the greedy
     // MMR chain over that candidate set (Similarity.mmrInvariant).
     "e_mmr_ann" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") === 0)
       // localCheckpoint: the PQ candidate plan (codebook training + ADC +
       // rerank) is consumed by BOTH the rerank and the invariant replay —
@@ -1685,7 +1686,7 @@ object SparkEntry {
     // a full top-k, ranks are cosine-monotone, and total brute-top-3 hits
     // meet a measured floor (RecallProbe: 10/30 at every sf; floor 6).
     "e_knn_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.lshKnn(emb, q, k = 3, nPlanes = 6),
@@ -1695,7 +1696,7 @@ object SparkEntry {
     // IVF ANN: K-Means coarse quantizer + nprobe cell search. Same
     // invariant shape as e_knn_lsh (RecallProbe: 14-18/30 hits; floor 9).
     "e_knn_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.ivfKnn(emb, q, k = 3, nCells = 16, nprobe = 3),
@@ -1713,7 +1714,7 @@ object SparkEntry {
     // 13/17/16; the pre-residual raw-code form measured 15/16/14); floor
     // 11 with measured margin.
     "e_knn_ivfpq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.ivfPqKnn(emb, q, k = 3, nCells = 16, nprobe = 4,
@@ -1730,7 +1731,7 @@ object SparkEntry {
     // region is the search. Same invariant floor as e_knn_ivfpq — the
     // rotation is orthogonal, so only quantization error moves.
     "e_knn_ivfpq_index" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.searchIvfPqIndex(Fixtures.ivfPqIndexPath(s, dir),
@@ -1786,7 +1787,7 @@ object SparkEntry {
     // rebuild is offline).
     "e_index_rebuild" -> ((s, dir) => {
       val root = Fixtures.ivfPqRebuildRoot(s, dir)
-      val pre = s.read.parquet(s"$root/pre")
+      val pre = ParquetInputs.read(s, s"$root/pre")
         .select(lit("pre").as("phase"), col("epoch").cast("long").as("epoch"),
           col("n_vectors"),
           when(col("epoch") === 0, col("drift_ratio") === 1.0)
@@ -1806,7 +1807,7 @@ object SparkEntry {
     // as the other ANN variants; floor measured by RecallProbe with margin
     // (28-30/30 across sf0.001-0.1).
     "e_knn_pq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.pqKnn(emb, q, k = 3, m = 16, codebookK = 32, shortlist = 50),
@@ -1815,7 +1816,7 @@ object SparkEntry {
 
     // Embedding cosine near-dup pairs, blocked by label.
     "e_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDup(s.read.parquet(s"$dir/embeddings.parquet"),
+      Dedup.embeddingNearDup(ParquetInputs.read(s, s"$dir/embeddings.parquet"),
           threshold = 0.35, blockCol = Some("label"))
         .orderBy("id_a", "id_b")),
 
@@ -1826,7 +1827,7 @@ object SparkEntry {
     // bit-identical) and recall ≥ 0.35 (RecallProbe at nPlanes=4:
     // 0.71/0.58/0.54 across sf 0.001/0.01/0.1).
     "e_neardup_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val lsh = Dedup.embeddingNearDupLsh(emb, threshold = 0.35, nPlanes = 4)
         .select("id_a", "id_b")
       val exact = Dedup.embeddingNearDup(emb, threshold = 0.35,
@@ -1853,7 +1854,7 @@ object SparkEntry {
     // The embedding-side twin of d_dedup_clusters; oracle is the same
     // DuckDB recursive-CTE reachability over the exact pair list.
     "e_dedup_clusters" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val pairs = Dedup.embeddingNearDup(emb, threshold = 0.35,
         blockCol = Some("label")).select("id_a", "id_b")
       Dedup.dedupClusters(emb, pairs, idCol = "vec_id").orderBy("vec_id")
@@ -1864,7 +1865,7 @@ object SparkEntry {
     // common. Scores are exact-integer micro-unit sums (see Retrieval):
     // order-independent, so cross-engine hash-comparable.
     "d_bm25" -> ((s, dir) =>
-      Retrieval.bm25(s.read.parquet(s"$dir/documents.parquet"),
+      Retrieval.bm25(ParquetInputs.read(s, s"$dir/documents.parquet"),
         Seq("hash", "join", "vector", "dup"), topK = 20)),
 
     // Batched BM25: three query bags scored in ONE corpus pass, per-query
@@ -1877,7 +1878,7 @@ object SparkEntry {
         (1L, "hash"), (1L, "join"),
         (2L, "vector"), (2L, "dup"),
         (3L, "hash"), (3L, "vector"), (3L, "dup")).toDF("query_id", "term")
-      Retrieval.bm25Batch(s.read.parquet(s"$dir/documents.parquet"),
+      Retrieval.bm25Batch(ParquetInputs.read(s, s"$dir/documents.parquet"),
           queries, topK = 10)
         .orderBy("query_id", "rank")
     }),
@@ -1887,8 +1888,8 @@ object SparkEntry {
     // fusion, no score calibration; both inputs are bounded shortlists so
     // the fuse is a tiny exact-integer aggregate.
     "d_hybrid" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val lex = Retrieval.asRanking(
         Retrieval.bm25(docs, Seq("hash", "join", "vector", "dup"), topK = 20),
         "score_micro")
@@ -1902,14 +1903,14 @@ object SparkEntry {
     // Unigram-LM log-probability (perplexity proxy) per doc under the
     // add-one-smoothed corpus model — the cheap quality-ranking score.
     "d_unigram_lp" -> ((s, dir) =>
-      Retrieval.unigramLogProb(s.read.parquet(s"$dir/documents.parquet"))
+      Retrieval.unigramLogProb(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .orderBy("doc_id")),
 
     // CCNet-style perplexity gate: drop the worst-scoring 10% tail by
     // integral per-token LM score — the strict-above-quantile cut is
     // engine-replayable (DuckDB recomputes the same membership).
     "d_lm_filter" -> ((s, dir) =>
-      Retrieval.perplexityGate(s.read.parquet(s"$dir/documents.parquet"),
+      Retrieval.perplexityGate(ParquetInputs.read(s, s"$dir/documents.parquet"),
           dropFrac = 0.1)
         .orderBy("doc_id")),
 
@@ -1917,7 +1918,7 @@ object SparkEntry {
     // centroid / mean-pooling primitive (semantic-dedup seeds, IVF warm
     // starts) as an order-independent integer aggregate.
     "e_centroids" -> ((s, dir) =>
-      Similarity.labelCentroids(s.read.parquet(s"$dir/embeddings.parquet"))
+      Similarity.labelCentroids(ParquetInputs.read(s, s"$dir/embeddings.parquet"))
         .orderBy("label", "dim")),
 
     // Dimension-covariance matrix of the embedding corpus (the whitening /
@@ -1926,7 +1927,7 @@ object SparkEntry {
     // exact micro² product sums DuckDB replays via the explode self-join.
     "e_covariance" -> ((s, dir) =>
       Similarity.covarianceMatrix(
-          s.read.parquet(s"$dir/embeddings.parquet"), dim = 64)
+          ParquetInputs.read(s, s"$dir/embeddings.parquet"), dim = 64)
         .orderBy("i", "j")),
 
     // PCA whitening invariant contract: whiten the corpus with its own
@@ -1935,7 +1936,7 @@ object SparkEntry {
     // are not SQL-replayable, so the oracle recomputes n and the CONTRACT
     // is the checked property (the e_semantic_dedup pattern).
     "e_whiten" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val wh = Similarity.whiten(emb, dim = 64)
         .select(col("whitened").as("embedding"))
       Similarity.covarianceMatrix(wh, dim = 64).agg(
@@ -1958,7 +1959,7 @@ object SparkEntry {
     // contract. README aniso table has the measured recall win
     // (m=4: 0.245 raw / 0.200 whitened / 0.698 opq-rotated).
     "e_opq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val rot = Similarity.fitOpqRotation(emb, dim = 64, m = 4)
       val r = rot.transform(emb).localCheckpoint()
       val norms = r.select(
@@ -1979,7 +1980,7 @@ object SparkEntry {
     // Token-window chunking (size 32, stride 24): the pre-embedding split.
     // chunk_md5 proves exact chunk content without carrying the text.
     "d_chunk" -> ((s, dir) =>
-      TextAnalysis.chunks(s.read.parquet(s"$dir/documents.parquet"),
+      TextAnalysis.chunks(ParquetInputs.read(s, s"$dir/documents.parquet"),
           size = 32, stride = 24)
         .orderBy("doc_id", "chunk_id")),
 
@@ -1988,7 +1989,7 @@ object SparkEntry {
     // fixed-length training-example packer, emitted as per-pack manifests.
     // Deterministic window replay: DuckDB recomputes the identical packing.
     "d_pack" -> ((s, dir) => {
-      val ch = TextAnalysis.chunks(s.read.parquet(s"$dir/documents.parquet"),
+      val ch = TextAnalysis.chunks(ParquetInputs.read(s, s"$dir/documents.parquet"),
         size = 32, stride = 24)
       TextAnalysis.packChunks(ch, budget = 256, nShards = 8)
         .groupBy("shard", "pack_id")
@@ -2002,7 +2003,7 @@ object SparkEntry {
     // ±5% of exact) and KLL-style approx quantiles of doc length (rank
     // accuracy 1%, checked inside the exact [q±2%] quantile band).
     "d_corpus_stats" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val nt = docs.select(TextAnalysis.tokenCount(col("text")).cast("long").as("nt"))
       val docStats = nt.agg(
         count(lit(1)).as("n_docs"), sum("nt").as("n_tokens"),
@@ -2032,7 +2033,7 @@ object SparkEntry {
     // audit a new corpus drop gets before entering the pipeline.
     "d_profile" -> ((s, dir) =>
       TextAnalysis.profile(
-          s.read.parquet(s"$dir/documents.parquet"),
+          ParquetInputs.read(s, s"$dir/documents.parquet"),
           cols = Seq("doc_id", "lang", "source", "text"))
         .orderBy("col_name")),
 
@@ -2040,7 +2041,7 @@ object SparkEntry {
     // (doc_id parity stands in for yesterday/today), top-20 drifted tokens
     // by the integer cross-multiplied gap |c_a*N_b - c_b*N_a|.
     "d_drift" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       TextAnalysis.tokenDrift(
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1), k = 20)
@@ -2050,7 +2051,7 @@ object SparkEntry {
     // over-represented language mix) — deterministic md5 rule per stratum.
     "d_stratified_sample" -> ((s, dir) =>
       TextAnalysis.stratifiedHashSample(
-          s.read.parquet(s"$dir/documents.parquet"),
+          ParquetInputs.read(s, s"$dir/documents.parquet"),
           Map("en" -> 0.5, "de" -> 0.25, "es" -> 0.25, "fr" -> 0.125,
             "zh" -> 0.0625))
         .select("doc_id", "lang")
@@ -2060,7 +2061,7 @@ object SparkEntry {
     // quality signal (token count / 400, clamped) — the row-wise
     // generalization of the stratified sampler's per-stratum constants.
     "d_weighted_sample" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       TextAnalysis.weightedHashSample(docs,
           TextAnalysis.tokenCount(col("text")).cast("double") / lit(400.0))
         .select("doc_id")
@@ -2071,7 +2072,7 @@ object SparkEntry {
     // every 10th doc, corpus = the rest; keep batch docs whose content is
     // new (anti-join on content hash, min-id survivor within the batch).
     "d_incremental_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       Dedup.incrementalDedup(
           corpus = docs.filter(col("doc_id") % 10 =!= 0),
           batch = docs.filter(col("doc_id") % 10 === 0))
@@ -2086,7 +2087,7 @@ object SparkEntry {
     // violations, kept ≤ n_exact_new) and fpp=1% bounds the loss (≥95%
     // of new docs survive). DuckDB recomputes n_exact_new independently.
     "d_bloom_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val batch = docs.filter(col("doc_id") % 10 === 0)
       val kept = Dedup.bloomDedup(corpus, batch, fpp = 0.01)
@@ -2117,14 +2118,14 @@ object SparkEntry {
       val src = Fixtures.memo(s"docsrc:$dir") {
         val p = java.nio.file.Files.createTempDirectory("graft-docsrc")
           .resolve("src").toString
-        s.read.parquet(s"$dir/documents.parquet")
+        ParquetInputs.read(s, s"$dir/documents.parquet")
           .select(col("doc_id").cast("string").as("id"),
             coalesce(col("text"), lit("")).as("text"))
           .write.parquet(p)
         p
       }
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val keyed = stream.select(md5(col("text")).as("key"), col("id"))
         .as[(String, String)]
       val name = "d_stream_dedup_" +
@@ -2132,21 +2133,22 @@ object SparkEntry {
       val q = graft.streaming.StreamDedup.keepFirst(keyed)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      val kept = s.table(name)
-      val corpus = s.read.parquet(src)
-        .select(md5(col("text")).as("key"), col("id"))
-      val stats = corpus.agg(count(lit(1)).as("n_total"),
-        count_distinct(col("key")).as("n_keys"))
-      val keptAgg = kept.agg(count(lit(1)).as("_n_kept"),
-        count_distinct(col("key")).as("_n_kept_keys"))
-      val bad = kept.join(corpus, Seq("key", "id"), "left_anti")
-        .agg(count(lit(1)).as("violations"))
-      stats.crossJoin(broadcast(keptAgg)).crossJoin(broadcast(bad))
-        .select(col("n_total"), col("n_keys"),
-          (col("_n_kept") === col("n_keys")).as("kept_eq_keys"),
-          (col("_n_kept_keys") === col("_n_kept")).as("one_per_key"),
-          col("violations"))
+      graft.streaming.StreamSessions.drainMemorySink(q, 180000) {
+        val kept = s.table(name)
+        val corpus = ParquetInputs.read(s, src)
+          .select(md5(col("text")).as("key"), col("id"))
+        val stats = corpus.agg(count(lit(1)).as("n_total"),
+          count_distinct(col("key")).as("n_keys"))
+        val keptAgg = kept.agg(count(lit(1)).as("_n_kept"),
+          count_distinct(col("key")).as("_n_kept_keys"))
+        val bad = kept.join(corpus, Seq("key", "id"), "left_anti")
+          .agg(count(lit(1)).as("violations"))
+        stats.crossJoin(broadcast(keptAgg)).crossJoin(broadcast(bad))
+          .select(col("n_total"), col("n_keys"),
+            (col("_n_kept") === col("n_keys")).as("kept_eq_keys"),
+            (col("_n_kept_keys") === col("_n_kept")).as("one_per_key"),
+            col("violations"))
+      }
     }),
 
     // Temperature-weighted source mixture (mT5/XLM-R-style alpha-
@@ -2154,7 +2156,7 @@ object SparkEntry {
     // weights/budgets a stratified sampler would be fed with.
     "d_source_mix" -> ((s, dir) =>
       TextAnalysis.temperatureMixture(
-          s.read.parquet(s"$dir/documents.parquet"), "source", 0.5)
+          ParquetInputs.read(s, s"$dir/documents.parquet"), "source", 0.5)
         .orderBy("source")),
 
     // Token-budget mixture plan: per-source have-vs-need token arithmetic
@@ -2163,7 +2165,7 @@ object SparkEntry {
     // but absent from the corpus — the plan must SURFACE it (0 docs,
     // NULL epochs), not drop it.
     "d_mix_plan" -> ((s, dir) =>
-      TextAnalysis.mixPlan(s.read.parquet(s"$dir/documents.parquet"),
+      TextAnalysis.mixPlan(ParquetInputs.read(s, s"$dir/documents.parquet"),
           Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.125,
             "src_books" -> 0.125), budget = 1000000L)
         .orderBy("source")),
@@ -2172,7 +2174,7 @@ object SparkEntry {
     // (doc_id >= 20) against a held-out eval set (doc_id < 20) — the GPT-3
     // appendix-C n-gram rule as a broadcast semi-join.
     "d_decontaminate" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       Dedup.decontaminate(
           train = docs.filter(col("doc_id") >= 20),
           eval = docs.filter(col("doc_id") < 20), k = 3)
@@ -2186,7 +2188,7 @@ object SparkEntry {
     // (violations = 0), recall >= 0.7 vs that list, n_exact
     // DuckDB-recomputed.
     "d_fuzzy_decontam" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val train = docs.filter(col("doc_id") % 10 =!= 0)
       val ev = docs.filter(col("doc_id") % 10 === 0)
       val fz = Dedup.fuzzyDecontaminate(train, ev, threshold = 0.2,
@@ -2224,7 +2226,7 @@ object SparkEntry {
     // DuckDB from the same float arrays (element-wise doubles are
     // bit-identical; cross-element sums are exact integers).
     "e_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(s.read.parquet(s"$dir/embeddings.parquet"))
+      Similarity.quantizeInt8(ParquetInputs.read(s, s"$dir/embeddings.parquet"))
         .orderBy("vec_id")),
 
     // Quantized ANN: brute-force top-k over the int8-reconstructed corpus
@@ -2232,7 +2234,7 @@ object SparkEntry {
     // Int8 reconstruction barely perturbs cosine ranks (floor measured by
     // RecallProbe across sf).
     "e_knn_q8" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = ParquetInputs.read(s, s"$dir/embeddings.parquet")
       val q = emb.filter(col("vec_id") < 10)
       annInvariant(
         Similarity.bruteForceKnn(Similarity.dequantized(emb), q, k = 3),
@@ -2281,7 +2283,7 @@ object SparkEntry {
     // band explode, the >cap filter, and the per-residue pair counts
     // bit-for-bit ("no silent caps", made driver-gated).
     "m_bucket_audit" -> ((s, dir) => {
-      def sigs = s.read.parquet(s"$dir/documents.parquet")
+      def sigs = ParquetInputs.read(s, s"$dir/documents.parquet")
         .select(col("doc_id").cast("long").as("id"),
           when(col("doc_id") % 5 === 0, lit(0L))
             .otherwise((col("doc_id") % 961 + 1).cast("long") *
@@ -2640,7 +2642,7 @@ object SparkEntry {
       val media = mediaMemo(s, s"fx_mediagate:$dir") {
         corpus
           .unionByName(Multimodal.junkImageMediaFromDocuments(
-              s.read.parquet(s"$dir/documents.parquet"))
+              ParquetInputs.read(s, s"$dir/documents.parquet"))
             .select((col("media_id") + lit(90000000L)).as("media_id"),
               col("bytes")))
       }
@@ -2658,7 +2660,7 @@ object SparkEntry {
     // disposition replays from doc_id arithmetic.
     "m_meta_gate" -> ((s, dir) => {
       val media = mediaMemo(s, s"fx_metagate:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         Multimodal.jpegMediaFromDocuments(docs)
           .unionByName(Multimodal.junkImageMediaFromDocuments(docs)
             .select((col("media_id") + lit(1000000L)).as("media_id"),
@@ -2679,7 +2681,7 @@ object SparkEntry {
     // per-group stars for the junk.
     "m_gated_dedup" -> ((s, dir) => {
       val media = mediaMemo(s, s"fx_gateddedup:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         Multimodal.jpegDedupMediaFromDocuments(docs)
           .unionByName(Multimodal.junkImageMediaFromDocuments(docs)
             .select((col("media_id") + lit(1000000L)).as("media_id"),
@@ -2864,7 +2866,7 @@ object SparkEntry {
       // 32 kHz pairs at hamming 0 under rate normalization; an
       // independent same-rate control pairs with nothing
       val media = mediaMemo(s, s"auddedup2:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         Multimodal.dedupAudioMediaFromDocuments(docs)
           .unionByName(Multimodal.resampledAudioCohortsFromDocuments(docs))
       }
@@ -2901,7 +2903,7 @@ object SparkEntry {
     // precision AND recall are both oracle-replayed.
     "m_video_dedup" -> ((s, dir) => {
       val media = mediaMemo(s, s"viddedup2:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         Multimodal.dedupVideoMediaFromDocuments(docs)
           .unionByName(Multimodal.perturbedVideoCohortsFromDocuments(docs))
       }
@@ -2961,16 +2963,17 @@ object SparkEntry {
             media.filter(col("media_id") % 4 === 0 || col("media_id") % 4 === 3),
             thumbSide = 8)))
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val name = "m_stream_image_dedup_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val q = graft.streaming.StreamSessions.streamingImageNearDup(stream, index)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.table(name)
-        .select(col("media_id"), col("match_id"), col("n_diff_ch"))
-        .orderBy("media_id")
+      graft.streaming.StreamSessions.drainMemorySink(q, 180000) {
+        s.table(name)
+          .select(col("media_id"), col("match_id"), col("n_diff_ch"))
+          .orderBy("media_id")
+      }
     }),
 
     // Degenerate-aware dedup ROUTING — the composition the bucket
@@ -2981,7 +2984,7 @@ object SparkEntry {
     // the oracle replays both halves exactly.
     "m_routed_dedup" -> ((s, dir) => {
       val media = mediaMemo(s, s"fx_routedimg:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         val planted = Multimodal.dedupImageMediaFromDocuments(docs)
           .select("media_id", "bytes")
         val flats = docs.select((col("doc_id") + lit(1000000L)).as("media_id"),
@@ -3019,7 +3022,7 @@ object SparkEntry {
     // star pairs and audible clips to fingerprint banding.
     "m_routed_audio" -> ((s, dir) => {
       val media = mediaMemo(s, s"fx_routedaud:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         val planted = Multimodal.dedupAudioMediaFromDocuments(docs)
         val silents = docs.select(
           (col("doc_id") + lit(1000000L)).as("media_id"),
@@ -3037,7 +3040,7 @@ object SparkEntry {
     // pairs while the planted perceptual groups pair via frame matching.
     "m_routed_video" -> ((s, dir) => {
       val media = mediaMemo(s, s"fx_routedvid:$dir") {
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
         val planted = Multimodal.dedupVideoMediaFromDocuments(docs)
           // round 16: the bit-perturbed cohort (pairs via banding only)
           // and the beyond-radius cohort (pairs with nothing) ride the
@@ -3114,17 +3117,18 @@ object SparkEntry {
         Multimodal.audioSignatureIndex(
           media.filter(col("media_id") % 4 === 0 || col("media_id") % 4 === 3)))
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val name = "m_stream_audio_dedup_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val q = graft.streaming.StreamSessions.streamingAudioNearDup(stream, index)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.table(name)
-        .select(col("media_id"), col("match_id"), col("hamming"),
-          col("n_diff_words"))
-        .orderBy("media_id", "match_id")
+      graft.streaming.StreamSessions.drainMemorySink(q, 180000) {
+        s.table(name)
+          .select(col("media_id"), col("match_id"), col("hamming"),
+            col("n_diff_words"))
+          .orderBy("media_id", "match_id")
+      }
     }),
 
     // STREAMING perceptual video dedup — the video twin: the BANDED
@@ -3139,7 +3143,7 @@ object SparkEntry {
     // perturbed member nf; every planted match is in temporal order, so
     // lis = n_matched throughout.
     "m_stream_video_dedup" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val media = mediaMemo(s, s"viddedup:$dir")(
         Multimodal.dedupVideoMediaFromDocuments(docs))
       val src = Fixtures.memo(s"vidstream16:$dir") {
@@ -3156,17 +3160,18 @@ object SparkEntry {
         Multimodal.videoFrameIndex(
           media.filter(col("media_id") % 4 === 0 || col("media_id") % 4 === 3)))
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val name = "m_stream_video_dedup_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val q = graft.streaming.StreamSessions.streamingVideoNearDup(stream, index)
         .writeStream.outputMode("update").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.table(name)
-        .select(col("media_id"), col("match_id"), col("n_matched"),
-          col("lis"))
-        .orderBy("media_id", "match_id")
+      graft.streaming.StreamSessions.drainMemorySink(q, 180000) {
+        s.table(name)
+          .select(col("media_id"), col("match_id"), col("n_matched"),
+            col("lis"))
+          .orderBy("media_id", "match_id")
+      }
     }),
 
     // INCREMENTAL perceptual AUDIO dedup — m_incr_dedup's audio sibling
@@ -3192,7 +3197,7 @@ object SparkEntry {
     // and its corpus base through the banding only. Every planted match
     // is in temporal order, so lis = n_matched throughout.
     "m_incr_video" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetInputs.read(s, s"$dir/documents.parquet")
       val media = mediaMemo(s, s"viddedup:$dir")(
         Multimodal.dedupVideoMediaFromDocuments(docs))
       val index = mediaMemo(s, s"vididx:$dir")(
@@ -3246,14 +3251,14 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-medout")
         .resolve("out").toString
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val q = graft.streaming.StreamSessions.streamingMediaNearDup(
           stream, imgIdx, audIdx, vidIdx, blobIdx) { (b, _) =>
           b.write.mode("append").parquet(out)
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.read.parquet(out).orderBy("media_id", "match_id", "kind")
+      ParquetInputs.read(s, out).orderBy("media_id", "match_id", "kind")
     }),
 
     // STREAMING twin of the CROSS-MODALITY GATE (round 18) — the last
@@ -3288,10 +3293,10 @@ object SparkEntry {
         Multimodal.blobMd5Index(corpus).write.parquet(s"$r/blob")
         r
       }
-      val imgIdx = s.read.parquet(s"$idxRoot/img")
-      val audIdx = s.read.parquet(s"$idxRoot/aud")
-      val vidIdx = s.read.parquet(s"$idxRoot/vid")
-      val blobIdx = s.read.parquet(s"$idxRoot/blob")
+      val imgIdx = ParquetInputs.read(s, s"$idxRoot/img")
+      val audIdx = ParquetInputs.read(s, s"$idxRoot/aud")
+      val vidIdx = ParquetInputs.read(s, s"$idxRoot/vid")
+      val blobIdx = ParquetInputs.read(s, s"$idxRoot/blob")
       val src = Fixtures.memo(s"gatedstream:$dir") {
         val p = java.nio.file.Files.createTempDirectory("graft-gatedsrc")
           .resolve("src").toString
@@ -3302,7 +3307,7 @@ object SparkEntry {
       val out = java.nio.file.Files.createTempDirectory("graft-gatedout")
         .resolve("out").toString
       val stream = s.readStream
-        .schema(s.read.parquet(src).schema).parquet(src)
+        .schema(ParquetInputs.read(s, src).schema).parquet(src)
       val q = graft.streaming.StreamSessions.streamingGatedMediaNearDup(
           stream, imgIdx, audIdx, vidIdx, blobIdx, minSide = 8,
           maxPixels = 1000000L, minDurationMs = 5L,
@@ -3311,7 +3316,7 @@ object SparkEntry {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       graft.streaming.StreamSessions.awaitDrained(q, 180000)
-      s.read.parquet(out).orderBy("media_id", "match_id", "kind")
+      ParquetInputs.read(s, out).orderBy("media_id", "match_id", "kind")
     }),
 
     // The COMPLETE media dedup pipeline as one composed run — the media
@@ -3385,7 +3390,7 @@ object SparkEntry {
 
     // Q1-style pricing summary: exact decimal sums surfaced as doubles.
     "q1_pricing" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
       val base = col("l_extendedprice").cast(DecimalType(12, 2))
       val oneMinusDisc = lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))
       val onePlusTax = lit(1).cast(DecimalType(4, 2)) + col("l_tax").cast(DecimalType(4, 2))
@@ -3412,13 +3417,13 @@ object SparkEntry {
     // nation is the only broadcast side — the per-customer aggregate
     // joins customer on its own grouping key.
     "q10_returns" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_returnflag") === "R")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val nat = s.read.parquet(s"$dir/nation.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val nat = ParquetInputs.read(s, s"$dir/nation.parquet")
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3437,10 +3442,10 @@ object SparkEntry {
     // ship-date month — conditional exact-decimal sums, ONE fixed-shape
     // double division at the end.
     "q14_promo" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3460,9 +3465,9 @@ object SparkEntry {
     // The quantity HAVING runs on the per-order aggregate BEFORE any join
     // — the classic semi-reduction.
     "q18_large" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
       val big = li.groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast(DecimalType(12, 2))).as("_sumq"))
         .filter(col("_sumq") > 250)
@@ -3477,9 +3482,9 @@ object SparkEntry {
     }),
 
     "q3_revenue" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3500,12 +3505,12 @@ object SparkEntry {
     // Q5-style local-supplier volume: 6-way join through region, broadcast
     // dims, grouped by nation.
     "q5_nation_volume" -> ((s, dir) => {
-      val region = s.read.parquet(s"$dir/region.parquet")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
+      val region = ParquetInputs.read(s, s"$dir/region.parquet")
+      val nation = ParquetInputs.read(s, s"$dir/nation.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3526,8 +3531,8 @@ object SparkEntry {
     // Q4-style: semi-join with a cross-side condition (orders having any
     // lineitem shipped after the order date), counted per priority.
     "q4_semi" -> ((s, dir) => {
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
       ord.join(li, col("o_orderkey") === col("l_orderkey") &&
           col("l_shipdate") > col("o_orderdate"), "left_semi")
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n_orders"))
@@ -3536,8 +3541,8 @@ object SparkEntry {
 
     // Anti-join: customers with no orders, per market segment.
     "q_anti_customers" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
       cust.join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n_customers"))
         .orderBy("c_mktsegment")
@@ -3546,7 +3551,7 @@ object SparkEntry {
     // Rollup (grouping sets): counts at (flag, status), (flag), and total
     // levels, disambiguated by grouping id.
     "q_rollup" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
       li.rollup("l_returnflag", "l_linestatus")
         .agg((grouping(col("l_returnflag")) +
             grouping(col("l_linestatus")) * 2).cast("long").as("gid"),
@@ -3561,11 +3566,11 @@ object SparkEntry {
     // Q7-style: bilateral shipping volume between two nations by year
     // (double nation join with disjunctive pair filter).
     "q7_volume" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val nation = ParquetInputs.read(s, s"$dir/nation.parquet")
       val n1 = nation.select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
       val n2 = nation.select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
@@ -3586,7 +3591,7 @@ object SparkEntry {
 
     // Window top-k: 3 highest-value orders per priority class.
     "q_topk_orders" -> ((s, dir) => {
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_orderpriority")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -3599,7 +3604,7 @@ object SparkEntry {
     // Q6-style forecast revenue: pure filter+aggregate — the pushdown
     // showcase (every predicate reaches the Parquet scan).
     "q6_forecast" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
       li.filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           col("l_discount") >= 0.03 && col("l_discount") <= 0.05 &&
@@ -3617,10 +3622,10 @@ object SparkEntry {
     // a region filter. Cost is an exact DECIMAL min, so the min-equality
     // join is engine-exact (2dp source data; no double compare).
     "q2_min_cost" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
-      val nat = s.read.parquet(s"$dir/nation.parquet")
-      val reg = s.read.parquet(s"$dir/region.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
+      val nat = ParquetInputs.read(s, s"$dir/nation.parquet")
+      val reg = ParquetInputs.read(s, s"$dir/region.parquet")
         .filter(col("r_name") === "EUROPE")
       val ps = li.groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(min(col("l_extendedprice").cast(DecimalType(12, 2))).as("cost"))
@@ -3646,10 +3651,10 @@ object SparkEntry {
     // DECIMAL(18,4) sum through the max-equality compare (order-
     // independent, engine-exact); doubles appear only in the output.
     "q15_top_supplier" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1999-04-01").cast("timestamp"))
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
       val discPrice = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3671,12 +3676,12 @@ object SparkEntry {
     // exact integer cents: keep bal_cents · n_pos > sum_pos_cents — no
     // division, no doubles, engine-exact. Anti-join on 2001+ orders.
     "q22_opportunity" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
         .withColumn("bal_cents",
           round(col("c_acctbal") * 100).cast("long"))
       val pos = cust.filter(col("bal_cents") > 0)
         .agg(sum(col("bal_cents")).as("_sum"), count(lit(1)).as("_n"))
-      val recent = s.read.parquet(s"$dir/orders.parquet")
+      val recent = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))
         .select(col("o_custkey"))
       cust.crossJoin(broadcast(pos))
@@ -3696,19 +3701,19 @@ object SparkEntry {
     // numerator/denominator as exact decimal sums, ONE fixed-shape
     // double division per year (the q14 discipline).
     "q8_market_share" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(col("p_type") === "ECONOMY")
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
-      val n2 = s.read.parquet(s"$dir/nation.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
+      val n2 = ParquetInputs.read(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").as("_sn_key"), col("n_name").as("supp_nation"))
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val n1 = s.read.parquet(s"$dir/nation.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val n1 = ParquetInputs.read(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").as("_cn_key"), col("n_regionkey").as("_cr_key"))
-      val reg = s.read.parquet(s"$dir/region.parquet")
+      val reg = ParquetInputs.read(s, s"$dir/region.parquet")
         .filter(col("r_name") === "ASIA")
       val vol = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
@@ -3733,8 +3738,8 @@ object SparkEntry {
     // exclusion rides the JOIN condition (a WHERE would silently drop
     // the zero bucket), two cascaded aggregates.
     "q13_custdist" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val cust = ParquetInputs.read(s, s"$dir/customer.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderpriority") =!= "1-URGENT")
       cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_custkey"))
@@ -3752,8 +3757,8 @@ object SparkEntry {
     // 5·qty·cnt < sum — quantities are integral by data contract (the
     // cast would corrupt silently otherwise, so it asserts).
     "q17_small_qty" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(col("p_brand") === "Brand#13")
       val qtyLong = {
         val q = col("l_quantity")
@@ -3780,12 +3785,12 @@ object SparkEntry {
     // selective) and nation broadcast; lineitem⋈orders is the only big
     // shuffle.
     "q9_profit" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(col("p_name").contains("bolt"))
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
-      val nat = s.read.parquet(s"$dir/nation.parquet")
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
+      val nat = ParquetInputs.read(s, s"$dir/nation.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
       val dp = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
         .cast(DecimalType(18, 4))
@@ -3814,9 +3819,9 @@ object SparkEntry {
     // is a one-row aggregate broadcast; the per-part aggregate shuffles
     // once on its own grouping key.
     "q11_important_stock" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
-      val nat = s.read.parquet(s"$dir/nation.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
+      val nat = ParquetInputs.read(s, s"$dir/nation.parquet")
         .filter(col("n_name") === "NATION_3")
       val dp = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
@@ -3843,10 +3848,10 @@ object SparkEntry {
     // priority-conditional counts, grouped by l_returnflag (the shipmode
     // stand-in). Pure counts — no float hazard at all.
     "q12_priority" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      val ord = s.read.parquet(s"$dir/orders.parquet")
+      val ord = ParquetInputs.read(s, s"$dir/orders.parquet")
       val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       li.join(ord, col("l_orderkey") === col("o_orderkey") &&
           col("l_shipdate") > col("o_orderdate"))
@@ -3865,12 +3870,12 @@ object SparkEntry {
     // both broadcast; the only big shuffles are the pair-distinct and
     // the final partial-distinct aggregate.
     "q16_supplier_cnt" -> ((s, dir) => {
-      val pairs = s.read.parquet(s"$dir/lineitem.parquet")
+      val pairs = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .select("l_partkey", "l_suppkey").distinct()
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(col("p_brand") =!= "Brand#13" && col("p_type") =!= "MEDIUM" &&
           col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34))
-      val badSupp = s.read.parquet(s"$dir/supplier.parquet")
+      val badSupp = ParquetInputs.read(s, s"$dir/supplier.parquet")
         .filter(col("s_acctbal") < 0).select("s_suppkey")
       pairs.join(broadcast(badSupp),
           col("l_suppkey") === col("s_suppkey"), "left_anti")
@@ -3896,9 +3901,9 @@ object SparkEntry {
         col("p_size").between(1, 10) && col("p_type") === "MEDIUM"
       val pb3 = col("p_brand") === "Brand#33" &&
         col("p_size").between(1, 15) && col("p_type") === "LARGE"
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_quantity").between(1, 30))
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(pb1 || pb2 || pb3)
       val dp = (col("l_extendedprice").cast(DecimalType(12, 2)) *
         (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
@@ -3921,9 +3926,9 @@ object SparkEntry {
     // (per-part totals are unaffected); the qualifying-supplier set is
     // tiny and broadcast into the semi join.
     "q20_excess" -> ((s, dir) => {
-      val part = s.read.parquet(s"$dir/part.parquet")
+      val part = ParquetInputs.read(s, s"$dir/part.parquet")
         .filter(col("p_name").contains("bolt"))
-      val sq = s.read.parquet(s"$dir/lineitem.parquet")
+      val sq = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("2000-01-01").cast("timestamp"))
         .join(broadcast(part), col("l_partkey") === col("p_partkey"))
@@ -3934,9 +3939,9 @@ object SparkEntry {
       val qual = sq.join(tot, col("l_partkey") === col("_pk"))
         .filter(lit(2L) * col("qty") > col("tq"))
         .select("l_suppkey").distinct()
-      val nat = s.read.parquet(s"$dir/nation.parquet")
+      val nat = ParquetInputs.read(s, s"$dir/nation.parquet")
         .filter(col("n_name").isin("NATION_3", "NATION_4"))
-      s.read.parquet(s"$dir/supplier.parquet")
+      ParquetInputs.read(s, s"$dir/supplier.parquet")
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .join(broadcast(qual), col("s_suppkey") === col("l_suppkey"),
           "left_semi")
@@ -3959,17 +3964,17 @@ object SparkEntry {
     "q21_waiting" -> ((s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("l_orderkey")
-      val ordF = s.read.parquet(s"$dir/orders.parquet")
+      val ordF = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(col("o_orderstatus") === "F")
         .select("o_orderkey", "o_orderdate")
-      val perSupp = s.read.parquet(s"$dir/lineitem.parquet")
+      val perSupp = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .join(ordF, col("l_orderkey") === col("o_orderkey"))
         .withColumn("_late",
           (col("l_shipdate") > col("o_orderdate") +
             expr("INTERVAL 60 DAYS")).cast("int"))
         .groupBy("l_orderkey", "l_suppkey")
         .agg(sum("_late").as("_n_late"))
-      val supp = s.read.parquet(s"$dir/supplier.parquet")
+      val supp = ParquetInputs.read(s, s"$dir/supplier.parquet")
       perSupp
         .withColumn("_nsupp", count(lit(1)).over(w))
         .withColumn("_nlate_supp",
@@ -4132,7 +4137,7 @@ object SparkEntry {
     // exchange carries the table. Result provably equals the sort-limit.
     "q_topk_agg" -> ((s, dir) => {
       import s.implicits._
-      val topk = s.read.parquet(s"$dir/orders.parquet")
+      val topk = ParquetInputs.read(s, s"$dir/orders.parquet")
         .select(col("o_totalprice").cast("double"), col("o_orderkey").cast("long"))
         .as[(Double, Long)]
         .select(Sketch.TopK(15).toColumn.name("tk")).toDF("tk")
@@ -4166,7 +4171,7 @@ object SparkEntry {
     // the full formula). The bigram stream is built inside the scan
     // projection — no self-join.
     "d_bigram_lp" -> ((s, dir) =>
-      Retrieval.bigramLogProb(s.read.parquet(s"$dir/documents.parquet"))
+      Retrieval.bigramLogProb(ParquetInputs.read(s, s"$dir/documents.parquet"))
         .orderBy("doc_id")),
 
     // Binned interval join (RangeJoin): lineitem ship-dates sliced against
@@ -4176,10 +4181,10 @@ object SparkEntry {
     // CartesianProduct / BroadcastNestedLoopJoin in the plan). Exact
     // cent-integer sums.
     "q_range_join" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetInputs.read(s, s"$dir/lineitem.parquet")
         .select(col("l_shipdate").cast("timestamp_ltz").cast("long").as("ship_ts"),
           round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-      val camp = s.read.parquet(s"$dir/orders.parquet")
+      val camp = ParquetInputs.read(s, s"$dir/orders.parquet")
         .filter(pmod(col("o_orderkey"), lit(997L)) === 1)
         .select(col("o_orderkey").as("campaign"),
           col("o_orderdate").cast("timestamp_ltz").cast("long").as("w_start"))
@@ -4225,7 +4230,7 @@ object SparkEntry {
     // exact DuckDB replay.
     "d_domain_cap" -> ((s, dir) =>
       TextAnalysis.capPerGroup(
-          s.read.parquet(s"$dir/documents.parquet")
+          ParquetInputs.read(s, s"$dir/documents.parquet")
             .select("doc_id", "source", "n_chars"),
           maxPerGroup = 5)
         .orderBy("source", "cap_rank")),
@@ -4236,7 +4241,7 @@ object SparkEntry {
     // so DuckDB replays first-occurrence choice, coverage, and the
     // rebuilt text EXACTLY (hash keys are the 100 TB swap).
     "d_span_scrub" -> ((s, dir) =>
-      Dedup.scrubDupSpans(s.read.parquet(s"$dir/documents.parquet"), k = 5)
+      Dedup.scrubDupSpans(ParquetInputs.read(s, s"$dir/documents.parquet"), k = 5)
         .orderBy("doc_id")),
   )
 

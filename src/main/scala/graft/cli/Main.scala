@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count_distinct, sum}
 
 import graft.GraftSession
-import graft.core.{GraftError, TrailDB, TrailDBCons, TrailOps, TrailSchema}
+import graft.core.{GraftError, ParquetInputs, TrailDB, TrailDBCons, TrailOps, TrailSchema}
 import graft.filter.EventFilter
 
 /** CLI front-end mirroring the reference's `tdb` tool
@@ -576,7 +576,7 @@ object Main {
         val db = openDb(spark, in)
         val out = one("-o").getOrElse(s"$in.index")
         graft.core.TrailIndex.build(db, out)
-        val n = spark.read.parquet(out).count()
+        val n = ParquetInputs.read(spark, out).count()
         println(s"[index] $in: ${db.numTrails} trails, ${db.numEvents} events; " +
           s"fields=${db.fields.mkString(",")}; wrote $n (field,value,page) " +
           s"entries to $out")

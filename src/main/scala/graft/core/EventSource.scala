@@ -25,7 +25,7 @@ object EventSource {
     // equals DuckDB's epoch(ts) (naive timestamps treated as UTC) no matter
     // which entry point built the session.
     s.conf.set("spark.sql.session.timeZone", "UTC")
-    val ev = s.read.parquet(s"$sfDir/events.parquet")
+    val ev = ParquetInputs.read(s, s"$sfDir/events.parquet")
     ev.withColumn("ts", epochSeconds(ev))
   }
 

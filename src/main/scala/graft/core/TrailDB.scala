@@ -546,7 +546,7 @@ object TrailDB {
           "finalize; omit the argument (the sidecar applies)")
       case _ =>
     }
-    new TrailDB(spark, spark.read.parquet(path), None,
+    new TrailDB(spark, ParquetInputs.read(spark, path), None,
       bucketSeconds.orElse(recorded), info, Some(path))
   }
 

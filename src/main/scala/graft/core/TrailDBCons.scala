@@ -167,7 +167,7 @@ final class TrailDBCons(val spark: SparkSession, val fields: Seq[String]) {
     // over the just-written columnar data — the only shuffle is the exact
     // trail count, paid once here so it is never paid on the query path.
     TrailInfo.write(spark, path,
-      TrailInfo.compute(spark.read.parquet(path), fields))
+      TrailInfo.compute(ParquetInputs.read(spark, path), fields))
     TrailDB.open(spark, path)
   }
 
@@ -201,7 +201,7 @@ final class TrailDBCons(val spark: SparkSession, val fields: Seq[String]) {
     // Sidecar records the partition granularity too, so a bare open()
     // re-enables time-partition pruning without the caller passing it.
     TrailInfo.write(spark, path,
-      TrailInfo.compute(spark.read.parquet(path), fields, Some(secondsPerPartition)))
+      TrailInfo.compute(ParquetInputs.read(spark, path), fields, Some(secondsPerPartition)))
     TrailDB.open(spark, path, Some(secondsPerPartition))
   }
 
@@ -243,7 +243,7 @@ final class TrailDBCons(val spark: SparkSession, val fields: Seq[String]) {
       .drop("_z")
       .write.mode(SaveMode.Overwrite).parquet(path)
     TrailInfo.write(spark, path,
-      TrailInfo.compute(spark.read.parquet(path), fields))
+      TrailInfo.compute(ParquetInputs.read(spark, path), fields))
     TrailDB.open(spark, path)
   }
 

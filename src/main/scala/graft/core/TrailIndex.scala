@@ -249,7 +249,7 @@ object TrailIndex {
               "cannot verify the db binding. Rebuild with TrailIndex.build.")
       }
     }
-    spark.read.parquet(path)
+    ParquetInputs.read(spark, path)
   }
 
   /** Candidate pages for `filter`, or None when the index cannot prune

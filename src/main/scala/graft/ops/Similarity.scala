@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetInputs
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`). Two tiers:
   *
@@ -642,7 +644,7 @@ object Similarity {
   def appendToIvfPqIndex(newRows: DataFrame, indexPath: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     val spark = newRows.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = ParquetInputs.read(spark, s"$indexPath/meta").head()
     val nCells = meta.getAs[Int]("ncells")
     val m = meta.getAs[Int]("m")
     val codebookK = meta.getAs[Int]("k")
@@ -653,7 +655,7 @@ object Similarity {
     // each append batch is its own drift EPOCH (one narrow-column agg on
     // the existing codes; an index built before drift tracking starts at
     // epoch 1 — its build rows read as epoch 0 in the drift view)
-    val existing = spark.read.parquet(s"$indexPath/codes")
+    val existing = ParquetInputs.read(spark, s"$indexPath/codes")
     // refuse to create a mixed-schema codes dir: appending drift-tracked
     // rows to a pre-drift index would leave parquet footers disagreeing
     // on (cdist, epoch), and a later read picks one nondeterministically
@@ -694,7 +696,7 @@ object Similarity {
   def rebuildIvfPqIndex(corpus: DataFrame, indexPath: String,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     val spark = corpus.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = ParquetInputs.read(spark, s"$indexPath/meta").head()
     val opq = meta.schema.fieldNames.contains("rot") &&
       meta.getSeq[Double](meta.fieldIndex("rot")).nonEmpty
     val p = new org.apache.hadoop.fs.Path(indexPath)
@@ -756,7 +758,7 @@ object Similarity {
     * epoch-0 baseline broadcast is one row (or ≤ nCells rows per-cell). */
   def ivfPqIndexDrift(spark: SparkSession, indexPath: String,
       warnRatio: Double = 1.5, perCell: Boolean = false): DataFrame = {
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    val codes = ParquetInputs.read(spark, s"$indexPath/codes")
     require(codes.columns.contains("cdist") && codes.columns.contains("epoch"),
       s"index at $indexPath predates drift tracking (no cdist/epoch " +
       "columns) — rebuild it to enable drift stats")
@@ -803,9 +805,9 @@ object Similarity {
     * table's partition column — at 100 TB this reads parquet footers'
     * worth of work per cell, never vectors. */
   def ivfPqIndexStats(spark: SparkSession, indexPath: String): DataFrame = {
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = ParquetInputs.read(spark, s"$indexPath/meta").head()
     val nCells = meta.getAs[Int]("ncells")
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    val codes = ParquetInputs.read(spark, s"$indexPath/codes")
     // append-drift summary (round 13): worst epoch ratio + the advisory,
     // computed eagerly (tiny aggregate) so the health check can WARN
     // loudly instead of hiding a decayed index behind a lazy column.
@@ -854,7 +856,7 @@ object Similarity {
 
   private[graft] def loadIvfPqIndexMeta(spark: SparkSession,
       indexPath: String): IvfPqIndexMeta = {
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = ParquetInputs.read(spark, s"$indexPath/meta").head()
     val nCells = meta.getAs[Int]("ncells")
     val m = meta.getAs[Int]("m")
     val codebookK = meta.getAs[Int]("k")
@@ -889,7 +891,7 @@ object Similarity {
         adcTable(col("_eqv"), idx.cb).as("tbl"))
     val qCells = probeCells(q, idx.cents, nprobe)
       .select("query_id", "qn", "tbl", "cell", "_qcdot")
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    val codes = ParquetInputs.read(spark, s"$indexPath/codes")
     // The union of probed cells is BOUNDED by nCells regardless of query
     // count, so collecting it is always driver-safe — and turning it into
     // a literal isin() is what makes the codes scan PARTITION-PRUNE

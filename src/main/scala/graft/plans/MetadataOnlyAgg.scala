@@ -21,7 +21,7 @@ import graft.core.{TrailInfo, TrailSchema}
   * the `info` file written at finalize (src/tdb_encode.c:191-216, read at
   * src/tdb.c:677-700) — NEVER by scanning. graft's `TrailDB` accessors
   * already read the `_graft_info.json` sidecar, but a user writing plain
-  * DataFrame code (`spark.read.parquet(db).agg(count(*))`) would still
+  * DataFrame code (a parquet read of the db, then `.agg(count(*))`) would still
   * pay a full scan — at 100 TB, a full-corpus pass (and for
   * count(distinct uuid), a corpus-wide shuffle) to answer a number the
   * sidecar already holds. This rule rewrites such aggregates to a

@@ -29,6 +29,17 @@ object StreamSessions {
     q.exception.foreach(e => throw e)
   }
 
+  /** The answer of a `format("memory")` stream: drains `q` as
+    * [[awaitDrained]] does, builds `result` while the sink's temp view
+    * (named `q.name`) exists, then drops that view. Dataset analysis is
+    * eager, so the returned frame holds the sink's rows, not the view's
+    * name, and no run leaves a view (and its rows) in the session catalog.
+    * The view is dropped on failure too. */
+  def drainMemorySink(q: StreamingQuery, timeoutMs: Long)(
+      result: => DataFrame): DataFrame =
+    try { awaitDrained(q, timeoutMs); result }
+    finally q.sparkSession.catalog.dropTempView(q.name)
+
   /** Per-(uuid, session) rollup over a streaming trail source.
     * `events` must be a streaming DataFrame with uuid + a timestamp column.
     */

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetInputs
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
 /** One-off measurement harness for picking the recall floors baked into the
@@ -16,8 +17,8 @@ object RecallProbe {
 
     if (args.contains("--aniso")) { anisoWhiteningProbe(spark); return }
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val docs = ParquetInputs.read(spark, s"$dir/documents.parquet")
+    val emb = ParquetInputs.read(spark, s"$dir/embeddings.parquet")
 
     // d_minhash_lsh vs exact ngram pairs (threshold 0.2, 64/32, k=3)
     val lshPairs = Dedup.minhashDedupPairs(docs, threshold = 0.2,

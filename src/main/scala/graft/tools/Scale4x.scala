@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetInputs
+
 /** Scaling experiment: replicate documents/embeddings 4× (ids shifted, so
   * every doc gains 3 exact copies — worst case for dedup) and compare each
   * heavy operator's wall-clock at 1× vs 4×. Prints a markdown table row
@@ -98,7 +100,7 @@ object Scale4x {
       // query batch; the index path pays build ONCE, then search touches
       // only probed cells (partition-pruned) + the bounded rerank.
       import graft.ops.Similarity
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = ParquetInputs.read(spark, s"$sfDir/embeddings.parquet")
         .localCheckpoint()
       val n1 = emb1.count()
       val queries = emb1.filter(col("vec_id") < 24).localCheckpoint()
@@ -199,8 +201,8 @@ object Scale4x {
            col("time").as("click_time"),
            coalesce(col("props"), lit("")).as("click_props")))
       }
-      val frames = Seq(ev1, spark.read.parquet(s"$base/events4"),
-        spark.read.parquet(s"$base/events16"))
+      val frames = Seq(ev1, ParquetInputs.read(spark, s"$base/events4"),
+        ParquetInputs.read(spark, s"$base/events16"))
       println("| as-of variant | sf0.1 | 4× | 16× |")
       println("|---|---|---|---|")
       for ((label, f) <- Seq[(String, (DataFrame, DataFrame) => DataFrame)](
@@ -230,7 +232,7 @@ object Scale4x {
       // partition. Both forms are measured here (the window form is
       // re-created locally as the BEFORE) on uniform vs skewed corpora at
       // 1× and 16×.
-      val emb1u = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1u = ParquetInputs.read(spark, s"$sfDir/embeddings.parquet")
       val nEmb1 = emb1u.count()
       // deterministic jitter around the all-ones direction: cos between
       // any two skewed vectors ≈ 0.997 — same bucket, same cell, but below
@@ -244,11 +246,11 @@ object Scale4x {
             df.withColumn("vec_id", col("vec_id") + lit(i * nEmb1)))
           .reduce(_.unionByName(_))
       rep16(emb1u).write.mode("overwrite").parquet(s"$base/embsk16")
-      val emb16u = spark.read.parquet(s"$base/embsk16")
+      val emb16u = ParquetInputs.read(spark, s"$base/embsk16")
       skewed(emb1u).write.mode("overwrite").parquet(s"$base/embsk1s")
       skewed(emb16u).write.mode("overwrite").parquet(s"$base/embsk16s")
-      val frames = Seq(emb1u, spark.read.parquet(s"$base/embsk1s"),
-        emb16u, spark.read.parquet(s"$base/embsk16s"))
+      val frames = Seq(emb1u, ParquetInputs.read(spark, s"$base/embsk1s"),
+        emb16u, ParquetInputs.read(spark, s"$base/embsk16s"))
       // the r5 per-query window shortlist, kept here as the BEFORE shape
       def windowKnn(corpus: DataFrame, queries: DataFrame, k: Int,
           nPlanes: Int): DataFrame = {
@@ -300,8 +302,8 @@ object Scale4x {
       // measure it against the uncapped single-cell form, and keep the
       // depth-exhausted refusal visible (maxSplitDepth = 0 replays the
       // r6 guard).
-      val sk1 = spark.read.parquet(s"$base/embsk1s")
-      val sk16 = spark.read.parquet(s"$base/embsk16s")
+      val sk1 = ParquetInputs.read(spark, s"$base/embsk1s")
+      val sk16 = ParquetInputs.read(spark, s"$base/embsk16s")
       val tSplit = time(graft.ops.Dedup.semanticDedup(sk16, nCells = 4,
         threshold = 0.9, maxCellRows = 1000L, maxSplitDepth = 6)
         .queryExecution.toRdd.count())
@@ -327,7 +329,7 @@ object Scale4x {
       // coarse-cell equi-join with nCells grown with the corpus so cell
       // occupancy stays ~constant. The gap is the operator's whole scale
       // argument — measure it, don't argue it.
-      val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb1 = ParquetInputs.read(spark, s"$sfDir/embeddings.parquet")
       val n1 = emb1.count()
       def rep(f: Int): DataFrame = (0 until f).map(i =>
           emb1.withColumn("vec_id", col("vec_id") + lit(i * n1)))
@@ -336,8 +338,8 @@ object Scale4x {
       rep(16).write.mode("overwrite").parquet(s"$base/bt16")
       println("| factor | exact mine | blocked mine (nCells=8·f, nprobe=3) |")
       println("|---|---|---|")
-      for ((f, df) <- Seq(1 -> emb1, 4 -> spark.read.parquet(s"$base/bt4"),
-          16 -> spark.read.parquet(s"$base/bt16"))) {
+      for ((f, df) <- Seq(1 -> emb1, 4 -> ParquetInputs.read(spark, s"$base/bt4"),
+          16 -> ParquetInputs.read(spark, s"$base/bt16"))) {
         val a = df.filter(col("label") === 0)
         val b = df.filter(col("label") === 1)
         val tExact = time(graft.ops.Mining.bitextMine(a, b, k = 4)
@@ -363,7 +365,7 @@ object Scale4x {
       // every replica of an eval doc is a true contamination hit and the
       // pair count grows linearly with the factor (the ladder's built-in
       // sanity check).
-      val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
       def rep(f: Int): DataFrame = (0 until f).map(i =>
           docs1.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
         .reduce(_.unionByName(_))
@@ -387,8 +389,8 @@ object Scale4x {
       }
       println("| factor | exact cross-Jaccard | fuzzy LSH (verified) | pairs |")
       println("|---|---|---|---|")
-      for ((f, tr) <- Seq(1 -> docs1, 4 -> spark.read.parquet(s"$base/fz4"),
-          16 -> spark.read.parquet(s"$base/fz16"))) {
+      for ((f, tr) <- Seq(1 -> docs1, 4 -> ParquetInputs.read(spark, s"$base/fz4"),
+          16 -> ParquetInputs.read(spark, s"$base/fz16"))) {
         var nPairs = 0L
         val tExact = time { nPairs = exactPairs(tr); nPairs }
         val tFuzzy = time(graft.ops.Dedup.fuzzyDecontaminate(tr, eval,
@@ -407,7 +409,7 @@ object Scale4x {
       // axis) and alldup (every doc gains f−1 exact copies — adversarial
       // for the sharing/pair ops, whose true OUTPUT grows ~f² there;
       // sub-output-quadratic time is the pass bar, not sub-linear).
-      val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
       val nD = docs1.count()
       def rep(f: Int, tag: Boolean): DataFrame = (0 until f).map { i =>
         val s = docs1.withColumn("doc_id", col("doc_id") + lit(i * nD))
@@ -424,8 +426,8 @@ object Scale4x {
         println("| factor | cdcChunks | sharedChunkStats | containment prefix | containment exact |")
         println("|---|---|---|---|---|")
         for ((f, df) <- Seq(1 -> docs1,
-            4 -> spark.read.parquet(s"$base/cdc4-$shape"),
-            16 -> spark.read.parquet(s"$base/cdc16-$shape"))) {
+            4 -> ParquetInputs.read(spark, s"$base/cdc4-$shape"),
+            16 -> ParquetInputs.read(spark, s"$base/cdc16-$shape"))) {
           val tCh = time(graft.ops.TextAnalysis.cdcChunks(df,
             w = 4, maskBits = 3, minSize = 4, maxSize = 24)
             .queryExecution.toRdd.count())
@@ -457,7 +459,7 @@ object Scale4x {
       // whale = 50% of all docs reassigned to ONE key, deterministically
       // by doc_id.
       import org.apache.spark.sql.expressions.Window
-      val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val d1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
       val nD1 = d1.count()
       def rep(df: DataFrame, f: Int, tagTokens: Boolean): DataFrame =
         (0 until f).map { i =>
@@ -474,8 +476,8 @@ object Scale4x {
         .write.mode("overwrite").parquet(s"$base/ks-docs64")
       rep(d1, 64, tagTokens = true)
         .write.mode("overwrite").parquet(s"$base/ks-span64")
-      val d64 = spark.read.parquet(s"$base/ks-docs64")
-      val s64 = spark.read.parquet(s"$base/ks-span64")
+      val d64 = ParquetInputs.read(spark, s"$base/ks-docs64")
+      val s64 = ParquetInputs.read(spark, s"$base/ks-span64")
       val whale = pmod(col("doc_id"), lit(2)) === 0
       def whaleDomain(df: DataFrame) = df.withColumn("source",
         when(whale, lit("whale.example")).otherwise(col("source")))
@@ -675,7 +677,7 @@ object Scale4x {
       // Fixture synthesis and index freezes are SETUP (localCheckpoint /
       // untimed), the bench-memo convention.
       import graft.ops.Multimodal
-      val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
         .select("doc_id")
       val nD1 = docs1.count()
       require(nD1 % 4 == 0, s"fixture groups need 4 | nD1, got $nD1")
@@ -764,7 +766,7 @@ object Scale4x {
       // planted structure exactly at every factor (no precision decay as
       // the bucket space fills).
       import graft.ops.Multimodal
-      val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val d1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
         .select("doc_id")
       val nD1 = d1.count()
       require(nD1 % 4 == 0, s"fixture groups need 4 | nD1, got $nD1")
@@ -935,7 +937,7 @@ object Scale4x {
       // wall-clock should track corpus size near-linearly.
       import graft.ops.{Multimodal, Dedup}
       import spark.implicits._
-      val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val d1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
         .select("doc_id")
       val nD1 = d1.count()
       require(nD1 % 4 == 0, s"fixture groups need 4 | nD1, got $nD1")
@@ -1192,7 +1194,7 @@ object Scale4x {
       val batch1 = mixedMediaOf(rep(1)).filter(col("media_id") % 4 === 1 ||
         col("media_id") % 4 === 2).localCheckpoint()
       batch1.repartition(4).write.mode("overwrite").parquet(streamSrc)
-      val batchSchema = spark.read.parquet(streamSrc).schema
+      val batchSchema = ParquetInputs.read(spark, streamSrc).schema
       for (f <- Seq(1, 4, 16)) {
         val corpus = mixedMediaOf(rep(f)).filter(col("media_id") % 4 === 0 ||
           col("media_id") % 4 === 3).localCheckpoint()
@@ -1224,14 +1226,14 @@ object Scale4x {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           graft.streaming.StreamSessions.awaitDrained(q, 600000)
-          streamRows = spark.read.parquet(out).count()
+          streamRows = ParquetInputs.read(spark, out).count()
           0L
         }
         // untimed static replay of the SAME batch against the SAME
         // indexes — the one-body equality check
         val staticRows = Multimodal.mediaAgainstIndexes(batch1, imgIdx,
           audIdx, vidIdx, blobIdx).count()
-        val exact = spark.read.parquet(out)
+        val exact = ParquetInputs.read(spark, out)
           .filter(col("kind") === "exact_blob").count()
         val n = nD1
         // m=1 byte-identical copies match their corpus base per modality
@@ -1259,7 +1261,7 @@ object Scale4x {
       // bomb, a 36M-pixel allocation — per junk blob). Pair sets must
       // agree on the kept cohort.
       import graft.ops.Multimodal
-      val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val d1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
         .select("doc_id")
       val nD1 = d1.count()
       val keptFixture = Multimodal.jpegDedupMediaFromDocuments(d1)
@@ -1445,7 +1447,7 @@ object Scale4x {
           when(pmod(col("event_id"), lit(4)) === 0, lit(-1L))
             .otherwise(col("user_id")))
         .write.mode("overwrite").parquet(s"$base/whale128")
-      val ev = spark.read.parquet(s"$base/whale128")
+      val ev = ParquetInputs.read(spark, s"$base/whale128")
       val df = graft.core.TrailDB.fromEvents(ev, "user_id", "ts",
         Seq("event_type", "props"), Some("event_id")).df
       val n = df.count()
@@ -1522,7 +1524,7 @@ object Scale4x {
           ev1.withColumn("user_id", col("user_id") + lit(i * maxU)))
         .reduce(_.unionByName(_))
         .write.mode("overwrite").parquet(s"$base/skew-events16")
-      val ev16 = spark.read.parquet(s"$base/skew-events16")
+      val ev16 = ParquetInputs.read(spark, s"$base/skew-events16")
       def whaled(ev: DataFrame): DataFrame = ev.withColumn("user_id",
         when(pmod(col("event_id"), lit(4)) === 0, lit(-1L))
           .otherwise(col("user_id")))
@@ -1561,8 +1563,8 @@ object Scale4x {
       return
     }
 
-    val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val docs1 = ParquetInputs.read(spark, s"$sfDir/documents.parquet")
+    val emb1 = ParquetInputs.read(spark, s"$sfDir/embeddings.parquet")
     val nDocs = docs1.count(); val nEmb = emb1.count()
     def rep(df: DataFrame, idCol: String, n: Long, factor: Int): DataFrame =
       (0 until factor).map(i => df.withColumn(idCol, col(idCol) + lit(i * n)))
@@ -1614,11 +1616,11 @@ object Scale4x {
       println("| operator | sf0.1 | 4× | 16× |")
       println("|---|---|---|---|")
       ladder("alldup", Seq(docs1,
-        spark.read.parquet(s"$base/alldup4"),
-        spark.read.parquet(s"$base/alldup16")))
+        ParquetInputs.read(spark, s"$base/alldup4"),
+        ParquetInputs.read(spark, s"$base/alldup16")))
       ladder("disjoint", Seq(docs1,
-        spark.read.parquet(s"$base/disjoint4"),
-        spark.read.parquet(s"$base/disjoint16")))
+        ParquetInputs.read(spark, s"$base/disjoint4"),
+        ParquetInputs.read(spark, s"$base/disjoint16")))
 
       // ---- round-4 heavies at 1×/4×/16× ----
       def ladder3(label: String, frames: Seq[DataFrame])(
@@ -1632,8 +1634,8 @@ object Scale4x {
       for (factor <- Seq(4, 16))
         rep(emb1, "vec_id", nEmb, factor).write.mode("overwrite")
           .parquet(s"$base/emb$factor")
-      val embFrames = Seq(emb1, spark.read.parquet(s"$base/emb4"),
-        spark.read.parquet(s"$base/emb16"))
+      val embFrames = Seq(emb1, ParquetInputs.read(spark, s"$base/emb4"),
+        ParquetInputs.read(spark, s"$base/emb16"))
       ladder3("PQ ANN (encode+ADC+rerank)", embFrames)(e =>
         graft.ops.Similarity.pqKnn(e, e.filter(col("vec_id") < 10), k = 3,
           m = 16, codebookK = 32, shortlist = 50))
@@ -1647,8 +1649,8 @@ object Scale4x {
       // (intervals 1-in-997) — the shape that breaks a nested loop first.
       // Text content is irrelevant (numeric synth), so the alldup replicas
       // serve as the corpus axis.
-      val docFrames = Seq(docs1, spark.read.parquet(s"$base/alldup4"),
-        spark.read.parquet(s"$base/alldup16"))
+      val docFrames = Seq(docs1, ParquetInputs.read(spark, s"$base/alldup4"),
+        ParquetInputs.read(spark, s"$base/alldup16"))
       ladder3("binned range join", docFrames) { d =>
         val pts = d.select(col("doc_id").as("pid"),
           (col("doc_id") * 37 % 100000).as("ts"))
@@ -1669,8 +1671,8 @@ object Scale4x {
           .reduce(_.unionByName(_))
           .write.mode("overwrite").parquet(s"$base/events$factor")
       }
-      val evFrames = Seq(ev1, spark.read.parquet(s"$base/events4"),
-        spark.read.parquet(s"$base/events16"))
+      val evFrames = Seq(ev1, ParquetInputs.read(spark, s"$base/events4"),
+        ParquetInputs.read(spark, s"$base/events16"))
       def asTrails(ev: DataFrame): graft.core.TrailDB =
         graft.core.TrailDB.fromEvents(ev, "user_id", "ts",
           Seq("event_type", "props"), Some("event_id"))
@@ -1686,8 +1688,8 @@ object Scale4x {
 
     rep(docs1, "doc_id", nDocs, 4).write.mode("overwrite").parquet(s"$base/documents")
     rep(emb1, "vec_id", nEmb, 4).write.mode("overwrite").parquet(s"$base/embeddings")
-    val docs4 = spark.read.parquet(s"$base/documents")
-    val emb4 = spark.read.parquet(s"$base/embeddings")
+    val docs4 = ParquetInputs.read(spark, s"$base/documents")
+    val emb4 = ParquetInputs.read(spark, s"$base/embeddings")
     def run(label: String)(f: (DataFrame, DataFrame) => DataFrame): Unit = {
       val t1 = time(f(docs1, emb1).queryExecution.toRdd.count())
       val t4 = time(f(docs4, emb4).queryExecution.toRdd.count())

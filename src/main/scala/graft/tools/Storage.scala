@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.core.{TrailDB, TrailDBCons}
+import graft.core.{ParquetInputs, TrailDB, TrailDBCons}
 
 /** Storage-footprint experiment against the reference's published
   * compression baseline (BASELINE.md: ~8.8 bytes/event on the Wikipedia
@@ -81,12 +81,18 @@ object Storage {
         if (t.taskMetrics != null)
           bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
     }
+    // the read (and its schema inference, the first time) happens before
+    // the listener starts, so every cell counts the filtered scan alone
     def measure(path: String, pred: org.apache.spark.sql.Column): Long = {
+      val df = ParquetInputs.read(spark, path).filter(pred)
+      val sc = spark.sparkContext
+      org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
       bytesRead.set(0L)
-      spark.sparkContext.addSparkListener(listener)
-      spark.read.parquet(path).filter(pred).count()
-      Thread.sleep(500) // drain the listener bus
-      spark.sparkContext.removeSparkListener(listener)
+      sc.addSparkListener(listener)
+      try {
+        df.count()
+        org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
+      } finally sc.removeSparkListener(listener)
       bytesRead.get()
     }
     val (tMin, tMax) = {

@@ -17,6 +17,18 @@ class ConsSpec extends SparkSpec {
 
   private def uuidOf(i: Int): String = f"$i%032x"
 
+  test("finalizeTo runs at most 6 Spark jobs: open reuses the read-back's schema") {
+    // the write, the read-back's schema inference and the sidecar's stats
+    // pass; the open that follows reuses the read-back's schema and starts
+    // no inference job of its own
+    val df = (0 until 60).map(i => (uuidOf(i % 7), 100L + i, s"e${i % 3}", i.toLong))
+      .toDF("uuid", "time", "a", "seq")
+    val cons = new TrailDBCons(spark, Seq("a")).add(df)
+    val (db, jobs) = jobsDuring(cons.finalizeTo(tmp(), 2))
+    assert(jobs <= 6, s"finalizeTo ran $jobs jobs")
+    assert(db.numEvents === 60L)
+  }
+
   test("round trip: cons → finalize → open preserves values incl. '' and binary-ish strings") {
     val longVal = "x" * 1000
     val rows = for {

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.network.util.JavaUtils
 
-/** Every entry point runs one session config: the factory's. */
+/** Every entry point runs one session config, the factory's, and reads
+  * parquet inputs one way. */
 class GraftSessionSpec extends SparkSpec {
   test("the factory session carries the bench config and Spark's AQE defaults") {
     val conf = spark.conf
@@ -23,17 +24,24 @@ class GraftSessionSpec extends SparkSpec {
     assert(bytes("spark.sql.adaptive.advisoryPartitionSizeInBytes") == (64L << 20))
   }
 
+  /** The .scala files under `root` whose text contains `needle`. */
+  private def sourcesWith(root: String, needle: String): Seq[Path] = {
+    val files = Files.walk(Paths.get(root))
+    try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains(needle)).toList
+    finally files.close()
+  }
+
   test("sessions are built only in GraftSession") {
     val needle = "SparkSession" + ".builder"
-    def builders(root: String): Seq[Path] = {
-      val files = Files.walk(Paths.get(root))
-      try files.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          Files.readString(p).contains(needle)).toList
-      finally files.close()
-    }
-    assert(builders("src/main/scala") ==
+    assert(sourcesWith("src/main/scala", needle) ==
       Seq(Paths.get("src/main/scala/graft/GraftSession.scala")))
-    assert(builders("src/test/scala").isEmpty)
+    assert(sourcesWith("src/test/scala", needle).isEmpty)
+  }
+
+  test("parquet inputs are read only through ParquetInputs") {
+    assert(sourcesWith("src/main/scala", ".read" + ".parquet(") ==
+      Seq(Paths.get("src/main/scala/graft/core/ParquetInputs.scala")))
   }
 }

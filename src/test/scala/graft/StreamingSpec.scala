@@ -2153,4 +2153,35 @@ class StreamingSpec extends SparkSpec {
     StreamSessions.awaitDrained(ok, 60000)
     assert(!ok.isActive)
   }
+
+  test("memory-sink rows drop their temp view and still return their rows") {
+    // a small input dir with the columns the five stream rows read
+    val dir = Files.createTempDirectory("graft-stream-views").toString
+    (0 until 16).map(i => (i.toLong, s"document ${i % 12}"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    (0 until 30).map(i => (i.toLong, new java.sql.Timestamp(300000L * i),
+        (i % 3).toLong, s"e${i % 2}", i.toDouble, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    def views(prefix: String): Seq[String] =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith(prefix)).toSeq
+    val rows = Seq("t_stream_sessionize" -> "t_stream_sess_",
+      "d_stream_dedup" -> "d_stream_dedup_",
+      "m_stream_image_dedup" -> "m_stream_image_dedup_",
+      "m_stream_audio_dedup" -> "m_stream_audio_dedup_",
+      "m_stream_video_dedup" -> "m_stream_video_dedup_")
+    val out = rows.map { case (row, prefix) =>
+      val df = SparkEntry.queries(row)(spark, dir)
+      assert(views(prefix).isEmpty, s"$row left its memory-sink view")
+      row -> df.collect()
+    }.toMap
+    // the frames ran after their views were dropped
+    assert(out("t_stream_sessionize").map(_.getAs[Long]("num_events")).sum === 30L)
+    val dedup = out("d_stream_dedup").head
+    assert(dedup.getAs[Long]("n_total") === 16L)
+    assert(dedup.getAs[Long]("n_keys") === 12L)
+    assert(dedup.getAs[Boolean]("kept_eq_keys"))
+    assert(dedup.getAs[Long]("violations") === 0L)
+  }
 }

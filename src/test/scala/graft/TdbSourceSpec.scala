@@ -633,24 +633,13 @@ class TdbSourceSpec extends SparkSpec {
   test("writePackage runs at most 8 Spark jobs") {
     // the writer's passes: the input shuffle and its cache, one lexicon
     // read, one model aggregate and collect, and one encode-and-drain job
-    val sc = spark.sparkContext
     val df = (0 until 200).map(i =>
         (f"${i % 17}%032x", 100L + i, s"e${i % 3}", s"t${i % 7}"))
       .toDF("uuid", "time", "etype", "tag")
     val dir = Files.createTempDirectory("graft-tdb-jobs")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
-    sc.addSparkListener(listener)
-    try {
-      TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/jobs.tdb")
-      org.apache.spark.graft.Listeners.waitUntilEmpty(sc, 60000)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 8, s"writePackage ran ${jobs.get()} jobs")
+    val (_, jobs) = jobsDuring(
+      TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/jobs.tdb"))
+    assert(jobs <= 8, s"writePackage ran $jobs jobs")
   }
 
   test("wide timestamps: the export refuses past TDB_MAX_TIMEDELTA, fits just under (tests/c-tests/wide_timestamps.c)") {

@@ -160,14 +160,17 @@ final class TrailDBCons(val spark: SparkSession, val fields: Seq[String]) {
     val df = stagedOrEmpty
     val parts = if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    df.repartition(parts, col(TrailSchema.UuidCol))
-      .sortWithinPartitions(TrailSchema.UuidCol, TrailSchema.TimeCol, TrailSchema.SeqCol)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    // The `info` sidecar (reference: tdb_encode.c:191-216): one stats pass
-    // over the just-written columnar data — the only shuffle is the exact
-    // trail count, paid once here so it is never paid on the query path.
-    TrailInfo.write(spark, path,
-      TrailInfo.compute(ParquetInputs.read(spark, path), fields))
+    // The `info` sidecar (reference: tdb_encode.c:191-216, written from
+    // the encode's own pass): every trail sits whole in one sorted
+    // partition, so the stats ride the write itself and nothing is read
+    // back.
+    val (write, info) = TrailInfo.observed(
+      df.repartition(parts, col(TrailSchema.UuidCol))
+        .sortWithinPartitions(TrailSchema.UuidCol, TrailSchema.TimeCol,
+          TrailSchema.SeqCol),
+      fields, path)
+    write.write.mode(SaveMode.Overwrite).parquet(path)
+    TrailInfo.write(spark, path, info())
     TrailDB.open(spark, path)
   }
 

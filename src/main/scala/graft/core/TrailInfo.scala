@@ -1,7 +1,13 @@
 package graft.core
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted db metadata — the Spark-native analog of the reference's `info`
@@ -13,10 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Why it matters at scale: without the sidecar, `numTrails` is a
   * full-corpus exact-distinct (a 100 TB shuffle) EVERY time a user asks,
-  * and `numEvents`/`timeRange` are full scans. With it, finalize pays one
-  * extra aggregation over data it just wrote (amortized into the one-time
-  * encode cost, as in the reference) and every subsequent metadata call is
-  * a driver-side file read.
+  * and `numEvents`/`timeRange` are full scans. With it, finalize takes the
+  * stats once (during its write, like the reference's encode, or in one
+  * aggregation over the data it just wrote) and every subsequent metadata
+  * call is a driver-side file read.
   */
 final case class TrailInfo(
     numTrails: Long,
@@ -43,22 +49,73 @@ final case class TrailInfo(
 object TrailInfo {
   val FileName = "_graft_info.json"
 
-  /** One aggregation pass over a (freshly written) trail table. The exact
-    * distinct-uuid count is the only shuffle; count/min/max ride the same
-    * scan. Run once at finalize — never on the query path. */
-  def compute(df: DataFrame, fields: Seq[String],
-      bucketSeconds: Option[Long] = None): TrailInfo = {
-    val r = df.agg(
-      count_distinct(col(TrailSchema.UuidCol)).as("nt"),
-      count(lit(1)).as("ne"),
-      min(TrailSchema.TimeCol).as("mn"),
-      max(TrailSchema.TimeCol).as("mx"),
-      count(col(TrailSchema.TimeCol)).as("ntimed")).head()
+  /** The sidecar's stats, in [[fromStats]]' order: the trail count (its
+    * aggregate differs by path), events, min and max time, and the
+    * number of events with a non-null time. */
+  private def stats(numTrails: Column): Seq[Column] = Seq(
+    numTrails.as("num_trails"),
+    count(lit(1)).as("num_events"),
+    min(TrailSchema.TimeCol).as("min_time"),
+    max(TrailSchema.TimeCol).as("max_time"),
+    count(col(TrailSchema.TimeCol)).as("num_timed"))
+
+  private def fromStats(r: Row, fields: Seq[String],
+      bucketSeconds: Option[Long]): TrailInfo =
     TrailInfo(r.getLong(0), r.getLong(1),
       if (r.isNullAt(2)) 0L else r.getLong(2),
       if (r.isNullAt(3)) 0L else r.getLong(3),
       fields, bucketSeconds, r.getLong(4))
+
+  /** One aggregation pass over a written trail table. The exact
+    * distinct-uuid count is the only shuffle; count/min/max ride the same
+    * scan. The finalizes whose trails span files use it after their
+    * write (`finalizePartitioned`, `finalizeZOrdered`, `finalizeToTable`);
+    * `finalizeTo` takes the same stats during its write ([[observed]]).
+    * Never on the query path. */
+  def compute(df: DataFrame, fields: Seq[String],
+      bucketSeconds: Option[Long] = None): TrailInfo =
+    fromStats(df.select(stats(count_distinct(col(TrailSchema.UuidCol))): _*)
+      .head(), fields, bucketSeconds)
+
+  /** The stats of `sorted` taken while it is written, so the writer reads
+    * nothing back. `sorted` must be hash-partitioned on uuid and sorted
+    * within partitions by (uuid, time, seq), as `finalizeTo` writes it:
+    * the trail count is then one `row_number` window whose partitioning
+    * and ordering the child already has, so it adds no exchange and no
+    * sort. A trail is counted at its first row, and a null uuid is no
+    * trail, which are `count_distinct`'s semantics in [[compute]].
+    *
+    * Returns the frame to write (same columns and rows as `sorted`) and a
+    * function to call after the write. The metrics reach the driver
+    * through the listener bus; if they have not arrived within
+    * `ObservedWaitMs` (the bus dropped the event), the function falls
+    * back to [[compute]] over `path`, the written table. */
+  def observed(sorted: DataFrame, fields: Seq[String], path: String)
+      : (DataFrame, () => TrailInfo) = {
+    // `#` is outside the field-name charset, so no field is shadowed
+    val rn = "#trail_row"
+    val obs = Observation()
+    val observedStats = stats(count(when(col(rn) === 1 &&
+      col(TrailSchema.UuidCol).isNotNull, lit(1))))
+    val out = sorted
+      .withColumn(rn, row_number().over(Window
+        .partitionBy(TrailSchema.UuidCol)
+        .orderBy(TrailSchema.TimeCol, TrailSchema.SeqCol)))
+      .observe(obs, observedStats.head, observedStats.tail: _*)
+      .drop(rn)
+    val spark = sorted.sparkSession
+    (out, () =>
+      try fromStats(Await.result(obs.future, ObservedWaitMs.millis), fields, None)
+      catch {
+        case _: TimeoutException =>
+          System.err.println(s"[graft] the write's stats for $path did " +
+            s"not arrive within $ObservedWaitMs ms; computing them from " +
+            "the written table")
+          compute(ParquetInputs.read(spark, path), fields)
+      })
   }
+
+  private final val ObservedWaitMs = 60000L
 
   /** Write the sidecar into `dir` (any Hadoop-visible filesystem).
     * Written to a temp name then renamed, so a crash mid-write leaves

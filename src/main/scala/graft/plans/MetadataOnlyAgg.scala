@@ -125,10 +125,11 @@ object MetadataOnlyAggRule {
     * (modificationTime, length), so the cost on the optimizer hot path is
     * one driver-side getFileStatus instead of a read+parse — and a
     * RE-finalize to the same path (finalizeTo is SaveMode.Overwrite) is
-    * picked up instead of served stale. A MISS is never cached: finalize
-    * itself aggregates over the freshly-written parquet BEFORE the
-    * sidecar lands (TrailInfo.compute), so negative caching would
-    * permanently blind the rule to every db finalized in this JVM. */
+    * picked up instead of served stale. A MISS is never cached: a db is
+    * readable BEFORE its sidecar lands (finalizePartitioned and
+    * finalizeZOrdered aggregate over the freshly-written parquet with
+    * TrailInfo.compute, and any query may run in that window), so
+    * negative caching would permanently blind the rule to that db. */
   private val cache = TrieMap.empty[String, (Long, Long, TrailInfo)]
 
   private def infoFor(spark: SparkSession, root: String): Option[TrailInfo] = {

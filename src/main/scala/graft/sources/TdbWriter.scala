@@ -3,12 +3,14 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-file `.tdb` PACKAGE writer (SURVEY §2 S2) — emits a format-v1
   * tar the REFERENCE engine can open (`tdb_open` on a non-directory path,
@@ -19,11 +21,12 @@ import org.apache.spark.sql.functions._
   *
   * DISTRIBUTED ENCODE (round 13; driver-side before): per-trail bit
   * streams are independent given the lexicons + codebook, so trails
-  * range-partition by their LE-u128 uuid key and every expensive pass
-  * runs executor-side over that one shuffle — the metadata walk, the
-  * Huffman model's symbol counting (per-partition maps → one exact
-  * groupBy → the deterministic top-4096 candidate cut), and the encode
-  * itself (a lazy per-trail iterator, nothing buffers past one trail).
+  * hash-partition by uuid, sorted within each partition on the stored
+  * (uuid, time, seq) columns, and every expensive pass runs
+  * executor-side over that one shuffle — the metadata walk, the Huffman
+  * model's symbol counting (per-partition maps → one exact reduce by key
+  * → the deterministic top-4096 candidate cut), and the encode itself (a
+  * lazy per-trail iterator, nothing buffers past one trail).
   * Only ASSEMBLY is driver-side, inherently: the format is one
   * sequential tar, so the driver drains compact per-partition byte
   * blocks (the encoded stream is ~17 B/event — far smaller than the
@@ -31,11 +34,12 @@ import org.apache.spark.sql.functions._
   * cap is the tar size-field limit anyway; the in-memory caps below
   * guard the driver's assembly buffers, same bound as before.
   *
-  * SEVEN SPARK JOBS per package: the input shuffle and its
-  * DISK_ONLY cache (2), the fused lexicon distinct and one job reading
-  * it (2), the model aggregate and its one collect (2), and one job that
-  * encodes every partition and hands each block to the driver as its
-  * task finishes (1). Nothing but the input cache is persisted.
+  * SIX SPARK JOBS per package: the input shuffle and its DISK_ONLY
+  * cache (2), the fused lexicon distinct and one job reading it (2), one
+  * RDD job that walks the cache's InternalRows, reduces the model by key
+  * and takes its top rows (1), and one job that encodes every partition
+  * and hands each block to the driver as its task finishes (1). Nothing
+  * but the input cache is persisted.
   *
   * Encoding: HUFFMAN-CODED v1 streams by default (round 7; literal-only
   * before). Item frequencies are counted during the metadata pass, the
@@ -132,7 +136,6 @@ object TdbWriter {
       maxLexiconValues: Long = DefaultMaxLexiconValues): Unit = {
     import graft.core.TrailSchema.{SeqCol, TimeCol, UuidCol}
     val spark = df.sparkSession
-    import spark.implicits._
 
     require(maxLexiconValues > 0, "maxLexiconValues must be positive")
     // the reference validates field names at tdb_cons_open; here an
@@ -148,21 +151,16 @@ object TdbWriter {
       "tdb export: duplicate field names: " +
         fieldNames.diff(fieldNames.distinct).distinct.mkString(", "))
 
-    // byte-reversed hex = sort key whose string order equals the
-    // LITTLE-ENDIAN u128 order of the raw uuid bytes (hex pairs swap as
-    // whole bytes; lowercase hex compares numerically). v0 carries no
-    // order contract — hex-string order exercises that freedom.
-    val leKey =
-      if (v0) col(UuidCol)
-      else concat((0 until 16).reverse.map(i =>
-        substring(col(UuidCol), i * 2 + 1, 2)): _*)
     // ONE shuffle, HASH-partitioned on the trail key (hash, not range:
     // range partitioning costs an extra sampling pass over the input and
     // buys nothing here — global trail order is restored for free at
-    // assembly, where the driver merge-sorts the per-partition uuid
-    // lists it is already holding). Trails never straddle partitions
-    // (equal keys hash together); within a partition trails sit in
-    // final order (the sort), so every later pass is a partition walk.
+    // assembly, where the driver sorts the per-partition uuid lists it is
+    // already holding). Trails never straddle partitions (equal keys hash
+    // together) and each sits contiguous and time-ordered (the sort), so
+    // every later pass is a partition walk. The sort is on the stored
+    // columns, so within a partition trails sit in hex order, not in the
+    // format's LE-u128 order: a computed LE key would be rebuilt inside
+    // every comparison, and the assembly sort owns trail order anyway.
     // Everything downstream reads the CACHED shuffle — the input plan
     // (often an expensive upstream) is computed exactly once.
     // normalize hex case up front: "AB12…" and "ab12…" are the same
@@ -174,7 +172,7 @@ object TdbWriter {
         (if (df.columns.contains(SeqCol)) col(SeqCol) else lit(0L).as(SeqCol)) +:
         fieldNames.map(f => col(f).cast("string"))): _*)
       .repartition(col(UuidCol))
-      .sortWithinPartitions(leKey, col(TimeCol), col(SeqCol))
+      .sortWithinPartitions(col(UuidCol), col(TimeCol), col(SeqCol))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
     // guard throws (lexicon/timestamp caps, drain refusals, failed
@@ -198,44 +196,55 @@ object TdbWriter {
       //    which only forfeits one potential code hit per trail, never
       //    correctness. Per-partition map growth is capped: past the cap,
       //    new items stop being admitted (compression degrades gracefully,
-      //    correctness never).
+      //    correctness never). Which items a capped partition admits
+      //    follows its walk order, which is hex uuid order.
       //  - kind 1: per-partition metadata (events, trails, min/max ts,
       //    intra-trail max delta, max first-event ts), keyed by stat id.
-      // ONE groupBy aggregates both: symbol counts, events and trails by
-      // sum, the minimum timestamp by min, the other stats by max (never
-      // a sum of timestamps, which can overflow under ANSI). ONE collect
-      // then fetches the six stat rows (kind 1 sorts first) and the
-      // deterministic top-4096 candidate cut: count ≥ 2, (-count, lo, hi)
-      // order — buildCodes' former driver-side cut, computed where the
-      // data is.
+      // ONE RDD job over the cache's InternalRows (no Row encoder, no
+      // Catalyst plan) reduces both exactly by key and takes the six stat
+      // rows (kind 1 sorts first) and the deterministic top-4096 candidate
+      // cut: count ≥ 2, (-count, lo, hi) order — buildCodes' driver-side
+      // cut, computed where the data is. Each partition's counter is
+      // already one row per key, so the walk ships every reducer ONE
+      // packed block of its keys' (lo, hi, count) triples (reducer 0 also
+      // gets the stats) and each reducer merges its blocks into a
+      // counter: symbol counts, events and trails by sum, the minimum
+      // timestamp by min, the other stats by max (never a sum of
+      // timestamps).
       val compressL = compress
       val bigramsL = bigrams
-      val isMin = col("kind") === 1 && col("lo") === 2L
-      val isMax = col("kind") === 1 && col("lo") >= 3L
-      val modelRows = sortable.mapPartitions { it =>
+      val cached = sortable.queryExecution.toRdd
+      val reducers = cached.getNumPartitions
+      val modelRows = cached.mapPartitions { it =>
         val ids = bcLex.value.ids
         // primitive open-addressing counter: the boxed HashMap version
         // cost ~120 B/entry (~0.5 GB of untracked task heap at the cap,
         // OOM-prone under concurrent tasks); this is 24 B/slot, grown by
         // doubling so sparse partitions stay tiny
         val m = new PairCounter(1 << 22)
-        def count(lo: Long, hi: Long): Unit = if (compressL) m.add(lo, hi)
+        def count(lo: Long, hi: Long): Unit = if (compressL) m.add(lo, hi, 1L)
         var events = 0L; var trails = 0L
         var mn = Long.MaxValue; var mx = Long.MinValue
         var mxd = 0L; var mxFirst = Long.MinValue
-        var curUuid: String = null
+        var curUuid: UTF8String = null
         var started = false
         var prevTs = 0L
         val prevVals = new Array[Long](nF + 1)
         while (it.hasNext) {
           val r = it.next()
-          val uuid = r.getString(0); val ts = r.getLong(1)
+          val uuid = r.getUTF8String(0)
+          // the encode pass's Row reads refuse a null time the same way
+          if (r.isNullAt(1)) throw new NullPointerException(
+            "tdb package: null time in trail " + uuid)
+          val ts = r.getLong(1)
           events += 1
           if (ts < mn) mn = ts
           if (ts > mx) mx = ts
           val isFirst = !started || uuid != curUuid
           if (isFirst) {
-            started = true; curUuid = uuid; trails += 1
+            // the scan reuses its rows: keep a copy of the trail's uuid
+            started = true; curUuid = if (uuid == null) null else uuid.clone()
+            trails += 1
             if (ts > mxFirst) mxFirst = ts
             java.util.Arrays.fill(prevVals, 0L)
           } else if (ts - prevTs > mxd) mxd = ts - prevTs
@@ -247,7 +256,7 @@ object TdbWriter {
           var firstChanged = -1L
           var f = 0
           while (f < nF) {
-            val v = valueId(ids(f), r.getString(3 + f))
+            val v = valueId(ids(f), r.getUTF8String(3 + f))
             if (v != prevVals(f + 1)) {
               val item = TdbFormat.makeItem(f + 1, v)
               if (firstChanged == -1L) firstChanged = item
@@ -265,30 +274,41 @@ object TdbWriter {
           }
           prevTs = ts
         }
-        val freqRows = m.iterator
-          .map { case (l, h, c) => (0, l, h, c) }
+        val blocks = Array.fill(reducers)(new ArrayBuilder.ofLong)
+        m.iterator.foreach { case (l, h, c) =>
+          val b = blocks(reducerOf(l, h, reducers)); b += l; b += h; b += c
+        }
+        val stats =
+          if (events == 0) null
+          else Array(events, trails, mn, mx, mxd, mxFirst)
+        Iterator.tabulate(reducers)(p =>
+          (p, (blocks(p).result(), if (p == 0) stats else null)))
+      }.partitionBy(new HashPartitioner(reducers)).mapPartitions { it =>
+        val sums = new PairCounter(Int.MaxValue)
+        var stats: Array[Long] = null
+        it.foreach { case (_, (syms, st)) =>
+          var i = 0
+          while (i < syms.length) {
+            sums.add(syms(i), syms(i + 1), syms(i + 2)); i += 3
+          }
+          if (st != null) stats =
+            if (stats == null) st
+            else Array(stats(0) + st(0), stats(1) + st(1),
+              math.min(stats(2), st(2)), math.max(stats(3), st(3)),
+              math.max(stats(4), st(4)), math.max(stats(5), st(5)))
+        }
         val statRows =
-          if (events == 0) Iterator.empty
-          else Iterator((1, 0L, 0L, events), (1, 1L, 0L, trails),
-            (1, 2L, 0L, mn), (1, 3L, 0L, mx), (1, 4L, 0L, mxd),
-            (1, 5L, 0L, mxFirst))
-        freqRows ++ statRows
-      }.toDF("kind", "lo", "hi", "cnt")
-        .groupBy("kind", "lo", "hi")
-        .agg(coalesce(min(when(isMin, col("cnt"))),
-          max(when(isMax, col("cnt"))),
-          sum(when(!isMin && !isMax, col("cnt")))).as("cnt"))
-        .filter(col("kind") === 1 || col("cnt") >= 2L)
-        .orderBy(col("kind").desc, col("cnt").desc, col("lo"), col("hi"))
-        .limit(4096 + StatCount)
-        .collect()
+          if (stats == null) Iterator.empty
+          else stats.iterator.zipWithIndex.map { case (v, i) => (1, i.toLong, 0L, v) }
+        statRows ++ sums.iterator.collect { case (l, h, c) if c >= 2L => (0, l, h, c) }
+      }.takeOrdered(4096 + StatCount)(ModelOrder)
       // stat id → value; every partition with events emits all six, so
       // they are all present or (no events at all) all absent
       val stats = new Array[Long](StatCount)
       val freqs = new java.util.HashMap[(Long, Long), Long]()
-      modelRows.foreach { r =>
-        if (r.getInt(0) == 1) stats(r.getLong(1).toInt) = r.getLong(3)
-        else freqs.put((r.getLong(1), r.getLong(2)), r.getLong(3))
+      modelRows.foreach { case (kind, lo, hi, cnt) =>
+        if (kind == 1) stats(lo.toInt) = cnt
+        else freqs.put((lo, hi), cnt)
       }
       val numEvents = stats(0)
       val numTrails = stats(1)
@@ -447,8 +467,9 @@ object TdbWriter {
 
       // driver-side ASSEMBLY, the format's inherent single stream: the
       // job's result handler receives the compact per-partition blocks as
-      // their tasks finish, then the driver restores GLOBAL trail order
-      // with one merge-sort over the uuid keys: v1 orders by the uuid's
+      // their tasks finish, then the driver puts trails in GLOBAL order
+      // with one sort over the uuid keys (the only place trail order is
+      // set; partitions hold theirs in hex order): v1 orders by the uuid's
       // little-endian u128 value (compare raw bytes reversed), v0 by hex
       // string == raw byte order. The drain cap is 768 MiB: the ordered
       // dataBuf/uuidBuf below are a SECOND full copy of the blocks, so
@@ -644,6 +665,23 @@ object TdbWriter {
     * trails, min ts, max ts, max intra-trail delta, max first-event ts. */
   private final val StatCount = 6
 
+  /** The model reducer that owns symbol (lo, hi). */
+  private def reducerOf(lo: Long, hi: Long, reducers: Int): Int =
+    Math.floorMod(java.lang.Long.hashCode(lo * 0x9e3779b97f4a7c15L + hi), reducers)
+
+  /** The model rows' (kind, lo, hi, count) collect order: stats first
+    * (kind desc), then count desc, lo, hi — a total order, as (kind, lo,
+    * hi) is unique. */
+  private object ModelOrder extends Ordering[(Int, Long, Long, Long)] {
+    def compare(a: (Int, Long, Long, Long), b: (Int, Long, Long, Long)): Int = {
+      var c = Integer.compare(b._1, a._1)
+      if (c == 0) c = java.lang.Long.compare(b._4, a._4)
+      if (c == 0) c = java.lang.Long.compare(a._2, b._2)
+      if (c == 0) c = java.lang.Long.compare(a._3, b._3)
+      c
+    }
+  }
+
   /** Per-field lexicons: the distinct non-null non-empty values, in UTF-8
     * byte order (the order `orderBy` gives a string column; String's
     * UTF-16 compareTo orders supplementary characters differently). ONE
@@ -711,6 +749,10 @@ object TdbWriter {
   private def valueId(ids: java.util.HashMap[String, java.lang.Long],
       s: String): Long =
     if (s == null || s.isEmpty) 0L else ids.get(s)
+
+  private def valueId(ids: java.util.HashMap[String, java.lang.Long],
+      s: UTF8String): Long =
+    if (s == null || s.numBytes == 0) 0L else ids.get(s.toString)
 
   /** Minimal ustar header, field layout per the POSIX spec; magic matches
     * the reference packages' "ustar  \0" (old GNU) so headers byte-compare
@@ -853,8 +895,11 @@ object TdbWriter {
     * cap, so sparse partitions stay tiny; inserts past `cap` distinct
     * keys are dropped — the same silent-stop contract the HashMap cap
     * had (the global top-4096 cut only needs symbols frequent enough to
-    * surface in every partition). Occupancy = nonzero count (live counts
-    * start at 1 and only grow). */
+    * surface in every partition). Past the cap, which keys got in
+    * follows the partition's walk order: hex uuid order, then (time,
+    * seq). The model reducers merge the walks' counts into uncapped
+    * counters, so the reduce is exact. Occupancy = nonzero count (live
+    * counts are positive). */
   private final class PairCounter(cap: Int) {
     private var mask = 2047
     private var los = new Array[Long](mask + 1)
@@ -884,17 +929,17 @@ object TdbWriter {
         i += 1
       }
     }
-    def add(l: Long, h: Long): Unit = {
+    def add(l: Long, h: Long, c: Long): Unit = {
       val i = slot(l, h)
-      if (cnts(i) != 0L) cnts(i) += 1
+      if (cnts(i) != 0L) cnts(i) += c
       else if (n < cap) {
         // keep load ≤ 0.5 (mask+1 is the table size, n the live entries)
         if ((n + 1) * 2 > mask + 1) {
           grow()
           val j = slot(l, h)
-          los(j) = l; his(j) = h; cnts(j) = 1L
+          los(j) = l; his(j) = h; cnts(j) = c
         } else {
-          los(i) = l; his(i) = h; cnts(i) = 1L
+          los(i) = l; his(i) = h; cnts(i) = c
         }
         n += 1
       }

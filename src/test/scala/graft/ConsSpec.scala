@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.core.{TrailDB, TrailDBCons, TrailOps, TrailSchema}
+import graft.core.{ParquetInputs, TrailDB, TrailDBCons, TrailInfo, TrailOps, TrailSchema}
 
 /** Write-path round trip: what you write is what you get back
   * (reference: tests/c-tests/what_you_write_you_get_back.c — values incl.
@@ -17,16 +17,53 @@ class ConsSpec extends SparkSpec {
 
   private def uuidOf(i: Int): String = f"$i%032x"
 
-  test("finalizeTo runs at most 6 Spark jobs: open reuses the read-back's schema") {
-    // the write, the read-back's schema inference and the sidecar's stats
-    // pass; the open that follows reuses the read-back's schema and starts
-    // no inference job of its own
+  test("finalizeTo runs at most 3 Spark jobs: the stats ride the write") {
+    // the write's exchange, the write (which also takes the sidecar's
+    // stats), and open's schema inference; nothing is read back
     val df = (0 until 60).map(i => (uuidOf(i % 7), 100L + i, s"e${i % 3}", i.toLong))
       .toDF("uuid", "time", "a", "seq")
     val cons = new TrailDBCons(spark, Seq("a")).add(df)
     val (db, jobs) = jobsDuring(cons.finalizeTo(tmp(), 2))
-    assert(jobs <= 6, s"finalizeTo ran $jobs jobs")
+    assert(jobs <= 3, s"finalizeTo ran $jobs jobs")
     assert(db.numEvents === 60L)
+  }
+
+  test("finalizeTo's sidecar, taken during the write, equals TrailInfo.compute over the table") {
+    def check(name: String, cons: TrailDBCons, partitions: Int = 0): Unit = {
+      val path = tmp()
+      cons.finalizeTo(path, partitions)
+      val observed = TrailInfo.read(spark, path)
+      assert(observed.isDefined, s"$name: no sidecar")
+      val computed = TrailInfo.compute(ParquetInputs.read(spark, path), cons.fields)
+      val names = Seq("numTrails", "numEvents", "minTime", "maxTime",
+        "fields", "bucketSeconds", "numTimed")
+      names.zip(observed.get.productIterator.toSeq
+          .zip(computed.productIterator.toSeq))
+        .foreach { case (field, (o, c)) => assert(o === c, s"$name: $field") }
+    }
+    check("empty cons", new TrailDBCons(spark, Seq("f")))
+    check("null uuids and null times", new TrailDBCons(spark, Seq("f")).add(Seq(
+      (Option(uuidOf(1)), Option(5L), "a", 0L),
+      (Option.empty[String], Option(3L), "b", 1L),
+      (Option.empty[String], Option(9L), "c", 2L),
+      (Option(uuidOf(2)), Option.empty[Long], "d", 3L),
+      (Option(uuidOf(2)), Option(7L), "e", 4L),
+      (Option(uuidOf(3)), Option.empty[Long], "f", 5L))
+      .toDF("uuid", "time", "f", "seq")))
+    // one trail the window buffers whole, past its in-memory threshold
+    check("one long trail", new TrailDBCons(spark, Seq("f")).add(
+      spark.range(0, 20500).select(
+        when(col("id") < 20000, lit(uuidOf(4)))
+          .otherwise(format_string("%032x", col("id") % 17)).as("uuid"),
+        (col("id") * 7 % 1000).as("time"),
+        (col("id") % 5).cast("string").as("f"))))
+    check("multi-partition corpus", new TrailDBCons(spark, Seq("f", "g")).add(
+      spark.range(0, 6000, 1, 3).select(
+        format_string("%032x", col("id") * 31 % 401).as("uuid"),
+        (col("id") % 97 + 1000).as("time"),
+        (col("id") % 3).cast("string").as("f"),
+        when(col("id") % 11 === 0, lit(null)).otherwise(lit("x")).as("g"))),
+      partitions = 4)
   }
 
   test("round trip: cons → finalize → open preserves values incl. '' and binary-ish strings") {

@@ -630,16 +630,55 @@ class TdbSourceSpec extends SparkSpec {
     assert(back.toSeq === values)
   }
 
-  test("writePackage runs at most 8 Spark jobs") {
-    // the writer's passes: the input shuffle and its cache, one lexicon
-    // read, one model aggregate and collect, and one encode-and-drain job
+  test("writePackage runs at most 6 Spark jobs") {
+    // the writer's passes: the input shuffle and its cache, the lexicon
+    // distinct and its read, one model job, and one encode-and-drain job
     val df = (0 until 200).map(i =>
         (f"${i % 17}%032x", 100L + i, s"e${i % 3}", s"t${i % 7}"))
       .toDF("uuid", "time", "etype", "tag")
     val dir = Files.createTempDirectory("graft-tdb-jobs")
     val (_, jobs) = jobsDuring(
       TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/jobs.tdb"))
-    assert(jobs <= 8, s"writePackage ran $jobs jobs")
+    assert(jobs <= 6, s"writePackage ran $jobs jobs")
+  }
+
+  test("trail order comes from the assembly sort, not the partition sort") {
+    // one shuffle partition holds every trail in hex order; the uuids'
+    // first and last bytes are all distinct, so hex order and the
+    // format's LE-u128 order disagree throughout
+    val rnd = new scala.util.Random(7)
+    val firsts = rnd.shuffle((0 until 256).toList)
+    val lasts = rnd.shuffle((0 until 256).toList)
+    val uuids = (0 until 80).map { i =>
+      val mid = Array.fill(14)(rnd.nextInt(256).toByte)
+      (f"${firsts(i)}%02x" + mid.map(b => f"$b%02x").mkString +
+        f"${lasts(i)}%02x")
+    }
+    val df = uuids.zipWithIndex.flatMap { case (u, i) =>
+      (0 to i % 3).map(j => (u, 100L + j, s"e${(i + j) % 4}"))
+    }.toDF("uuid", "time", "etype")
+    val dir = Files.createTempDirectory("graft-tdb-order")
+    val out = s"$dir/order.tdb"
+    val shuffleParts = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(shuffleParts)
+    try {
+      spark.conf.set(shuffleParts, "1")
+      TdbWriter.writePackage(df.coalesce(1), Seq("etype"), out)
+    } finally spark.conf.set(shuffleParts, prior)
+    val meta = TdbFormat.TdbMeta.open(out)
+    assert(meta.numTrails === uuids.length.toLong)
+    def le(hex: String): BigInt = BigInt(hex.grouped(2).toSeq.reverse.mkString, 16)
+    val index = (0L until meta.numTrails).map(meta.uuidHex)
+    index.sliding(2).foreach { case Seq(a, b) =>
+      assert(le(a) < le(b), s"$a before $b is not ascending LE u128")
+    }
+    assert(index.sorted !== index, "hex order would have passed as well")
+    val back = spark.read.format("tdb").load(out)
+    uuids.zipWithIndex.foreach { case (u, i) =>
+      val hit = back.filter(col("uuid") === u).select("time").as[Long]
+        .collect().sorted.toSeq
+      assert(hit === (0 to i % 3).map(100L + _), s"trail $u")
+    }
   }
 
   test("wide timestamps: the export refuses past TDB_MAX_TIMEDELTA, fits just under (tests/c-tests/wide_timestamps.c)") {

@@ -7,7 +7,7 @@ import java.security.MessageDigest
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.graft.FileIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one way the engine reads a parquet input.
   *
@@ -25,7 +25,10 @@ import org.apache.spark.sql.types.StructType
   *    (each file's path, length and modification time, kept as a digest);
   *  - the confs that shape parquet schema inference have the same values
   *    ([[SchemaConfs]]).
-  * A change to any of them makes the next read infer again. An in-place
+  * A change to any of them makes the next read infer again. A writer that
+  * knows the schema it just wrote records it with [[seed]] under the new
+  * listing, so the first read after the write starts no job either; the
+  * schema it records must be what inference would return. An in-place
   * rewrite that keeps a file's path, length and modification time is not
   * detected. A missing path, a glob, or a listing that fails with an
   * `IOException` is read by plain `spark.read.parquet`, so its error keeps
@@ -58,17 +61,39 @@ object ParquetInputs {
     listing(spark, path) match {
       case None => spark.read.parquet(path)
       case Some((key, digest)) =>
-        val confs = SchemaConfs.map(k => spark.conf.getOption(k).orNull)
+        val now = confs(spark)
         val hit = cache.synchronized(Option(cache.get(key)))
-          .filter(e => e.listing == digest && e.confs == confs)
+          .filter(e => e.listing == digest && e.confs == now)
         hit match {
           case Some(e) => spark.read.schema(e.schema).parquet(path)
           case None =>
             val df = spark.read.parquet(path)
-            cache.synchronized(cache.put(key, Entry(digest, confs, df.schema)))
+            cache.synchronized(cache.put(key, Entry(digest, now, df.schema)))
             df
         }
     }
+
+  /** Record the schema of a parquet table the caller has just written to
+    * `path`, under its listing and the schema confs as they are now. The
+    * entry holds what inference returns for such a table: the written
+    * schema with every column, element and value nullable. */
+  def seed(spark: SparkSession, path: String, written: StructType): Unit =
+    listing(spark, path).foreach { case (key, digest) =>
+      val schema = nullable(written).asInstanceOf[StructType]
+      cache.synchronized(cache.put(key, Entry(digest, confs(spark), schema)))
+    }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  private def confs(spark: SparkSession): Seq[String] =
+    SchemaConfs.map(k => spark.conf.getOption(k).orNull)
 
   /** (qualified path, digest of its file listing), or None when the path
     * is a glob, is missing or cannot be listed. */

@@ -170,6 +170,8 @@ final class TrailDBCons(val spark: SparkSession, val fields: Seq[String]) {
           TrailSchema.SeqCol),
       fields, path)
     write.write.mode(SaveMode.Overwrite).parquet(path)
+    // the writer knows the schema it wrote, so open infers nothing
+    ParquetInputs.seed(spark, path, write.schema)
     TrailInfo.write(spark, path, info())
     TrailDB.open(spark, path)
   }

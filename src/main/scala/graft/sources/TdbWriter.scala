@@ -7,7 +7,8 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,12 +35,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * cap is the tar size-field limit anyway; the in-memory caps below
   * guard the driver's assembly buffers, same bound as before.
   *
-  * SIX SPARK JOBS per package: the input shuffle and its DISK_ONLY
-  * cache (2), the fused lexicon distinct and one job reading it (2), one
-  * RDD job that walks the cache's InternalRows, reduces the model by key
-  * and takes its top rows (1), and one job that encodes every partition
-  * and hands each block to the driver as its task finishes (1). Nothing
-  * but the input cache is persisted.
+  * FOUR SPARK JOBS per package, all over one sorted shuffle read as
+  * `InternalRow`s (the reference: one sort, then model and encode walks,
+  * src/tdb_encode.c:399-569): the input shuffle (1); one RDD job that
+  * walks every partition for its distinct values per field and merges
+  * them in per-field reducers (1); one that walks them again, reduces
+  * the model by key and takes its top rows (1); and one that encodes
+  * every partition and hands each block to the driver as its task
+  * finishes (1). Nothing is persisted: Spark keeps the shuffle's map
+  * output, so the input plan runs once, and each walk re-sorts its own
+  * partition.
   *
   * Encoding: HUFFMAN-CODED v1 streams by default (round 7; literal-only
   * before). Item frequencies are counted during the metadata pass, the
@@ -161,500 +166,503 @@ object TdbWriter {
     // columns, so within a partition trails sit in hex order, not in the
     // format's LE-u128 order: a computed LE key would be rebuilt inside
     // every comparison, and the assembly sort owns trail order anyway.
-    // Everything downstream reads the CACHED shuffle — the input plan
-    // (often an expensive upstream) is computed exactly once.
+    // Every pass below is an RDD job over this one query's InternalRows:
+    // Spark keeps the shuffle's map output, so the input plan (often an
+    // expensive upstream) is computed exactly once, and each walk re-sorts
+    // its own partition. The partition count is pinned: a bare
+    // repartition by column lets AQE coalesce a small input into one
+    // partition, and every walk would then run as a single task.
     // normalize hex case up front: "AB12…" and "ab12…" are the same
     // 16 raw bytes, and without this they would hash-partition and group
     // as TWO trails — duplicate keys in the uuid index, one unreachable
     // under the reference's unique-key binary search (src/tdb.c:552-585)
-    val sortable = df.select(
+    val rows = df.select(
       (lower(col(UuidCol)).as(UuidCol) +: col(TimeCol) +:
         (if (df.columns.contains(SeqCol)) col(SeqCol) else lit(0L).as(SeqCol)) +:
         fieldNames.map(f => col(f).cast("string"))): _*)
-      .repartition(col(UuidCol))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(UuidCol))
       .sortWithinPartitions(col(UuidCol), col(TimeCol), col(SeqCol))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .queryExecution.toRdd
+    val reducers = math.max(1, rows.getNumPartitions)
 
-    // guard throws (lexicon/timestamp caps, drain refusals, failed
-    // encode jobs) must not strand the DISK_ONLY blocks for the app's
-    // lifetime — the one cached frame unpersists on EVERY exit
-    try {
-      val nF = fieldNames.length
-      val lexicons = readLexicons(sortable, fieldNames, maxLexiconValues)
-      // broadcast the sorted value arrays once — the model and encode
-      // walks both need value → id maps on executors, which each executor
-      // builds once per broadcast (LexiconIds.ids), not per task or row
-      val bcLex = spark.sparkContext.broadcast(new LexiconIds(lexicons))
+    val nF = fieldNames.length
+    val lexicons = readLexicons(rows, reducers, fieldNames, maxLexiconValues)
+    // broadcast the sorted value arrays once — the model and encode
+    // walks both need value → id maps on executors, which each executor
+    // builds once per broadcast (LexiconIds.ids), not per task or row
+    val bcLex = spark.sparkContext.broadcast(new LexiconIds(lexicons))
 
-      // pass 1 (DISTRIBUTED model + metadata, ONE walk): each partition
-      // replays the edge-encoding walk the encode pass will do, emitting
-      //  - kind 0: Huffman symbol frequency rows (lo, hi item pair — hi=0
-      //    unigram, hi!=0 the (ts, first-changed) BIGRAM candidate, the
-      //    reference's big win on repetitive streams; the decoder's bigram
-      //    path is spec-proven). First-event timestamp items (delta =
-      //    ts − minTs) are SKIPPED — minTs is unknown during the walk —
-      //    which only forfeits one potential code hit per trail, never
-      //    correctness. Per-partition map growth is capped: past the cap,
-      //    new items stop being admitted (compression degrades gracefully,
-      //    correctness never). Which items a capped partition admits
-      //    follows its walk order, which is hex uuid order.
-      //  - kind 1: per-partition metadata (events, trails, min/max ts,
-      //    intra-trail max delta, max first-event ts), keyed by stat id.
-      // ONE RDD job over the cache's InternalRows (no Row encoder, no
-      // Catalyst plan) reduces both exactly by key and takes the six stat
-      // rows (kind 1 sorts first) and the deterministic top-4096 candidate
-      // cut: count ≥ 2, (-count, lo, hi) order — buildCodes' driver-side
-      // cut, computed where the data is. Each partition's counter is
-      // already one row per key, so the walk ships every reducer ONE
-      // packed block of its keys' (lo, hi, count) triples (reducer 0 also
-      // gets the stats) and each reducer merges its blocks into a
-      // counter: symbol counts, events and trails by sum, the minimum
-      // timestamp by min, the other stats by max (never a sum of
-      // timestamps).
-      val compressL = compress
-      val bigramsL = bigrams
-      val cached = sortable.queryExecution.toRdd
-      val reducers = cached.getNumPartitions
-      val modelRows = cached.mapPartitions { it =>
-        val ids = bcLex.value.ids
-        // primitive open-addressing counter: the boxed HashMap version
-        // cost ~120 B/entry (~0.5 GB of untracked task heap at the cap,
-        // OOM-prone under concurrent tasks); this is 24 B/slot, grown by
-        // doubling so sparse partitions stay tiny
-        val m = new PairCounter(1 << 22)
-        def count(lo: Long, hi: Long): Unit = if (compressL) m.add(lo, hi, 1L)
-        var events = 0L; var trails = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var mxd = 0L; var mxFirst = Long.MinValue
-        var curUuid: UTF8String = null
-        var started = false
-        var prevTs = 0L
-        val prevVals = new Array[Long](nF + 1)
-        while (it.hasNext) {
-          val r = it.next()
-          val uuid = r.getUTF8String(0)
-          // the encode pass's Row reads refuse a null time the same way
-          if (r.isNullAt(1)) throw new NullPointerException(
-            "tdb package: null time in trail " + uuid)
-          val ts = r.getLong(1)
-          events += 1
-          if (ts < mn) mn = ts
-          if (ts > mx) mx = ts
-          val isFirst = !started || uuid != curUuid
-          if (isFirst) {
-            // the scan reuses its rows: keep a copy of the trail's uuid
-            started = true; curUuid = if (uuid == null) null else uuid.clone()
-            trails += 1
-            if (ts > mxFirst) mxFirst = ts
-            java.util.Arrays.fill(prevVals, 0L)
-          } else if (ts - prevTs > mxd) mxd = ts - prevTs
-          // every emitted item counts as a unigram (so every emission path
-          // has a fallback code), and an intra event's (ts item, first
-          // changed item) pair ALSO counts as a bigram candidate — the
-          // double-weighting skews code lengths slightly, it never loses a
-          // code path
-          var firstChanged = -1L
-          var f = 0
-          while (f < nF) {
-            val v = valueId(ids(f), r.getUTF8String(3 + f))
-            if (v != prevVals(f + 1)) {
-              val item = TdbFormat.makeItem(f + 1, v)
-              if (firstChanged == -1L) firstChanged = item
-              count(item, 0L)
-              prevVals(f + 1) = v
-            }
-            f += 1
+    // pass 1 (DISTRIBUTED model + metadata, ONE walk): each partition
+    // replays the edge-encoding walk the encode pass will do, emitting
+    //  - kind 0: Huffman symbol frequency rows (lo, hi item pair — hi=0
+    //    unigram, hi!=0 the (ts, first-changed) BIGRAM candidate, the
+    //    reference's big win on repetitive streams; the decoder's bigram
+    //    path is spec-proven). First-event timestamp items (delta =
+    //    ts − minTs) are SKIPPED — minTs is unknown during the walk —
+    //    which only forfeits one potential code hit per trail, never
+    //    correctness. Per-partition map growth is capped: past the cap,
+    //    new items stop being admitted (compression degrades gracefully,
+    //    correctness never). Which items a capped partition admits
+    //    follows its walk order, which is hex uuid order.
+    //  - kind 1: per-partition metadata (events, trails, min/max ts,
+    //    intra-trail max delta, max first-event ts), keyed by stat id.
+    // ONE RDD job over the sorted InternalRows (no Row encoder, no
+    // Catalyst plan) reduces both exactly by key and takes the six stat
+    // rows (kind 1 sorts first) and the deterministic top-4096 candidate
+    // cut: count ≥ 2, (-count, lo, hi) order — buildCodes' driver-side
+    // cut, computed where the data is. Each partition's counter is
+    // already one row per key, so the walk ships every reducer ONE
+    // packed block of its keys' (lo, hi, count) triples (reducer 0 also
+    // gets the stats) and each reducer merges its blocks into a
+    // counter: symbol counts, events and trails by sum, the minimum
+    // timestamp by min, the other stats by max (never a sum of
+    // timestamps).
+    val compressL = compress
+    val bigramsL = bigrams
+    val modelRows = rows.mapPartitions { it =>
+      val ids = bcLex.value.ids
+      // primitive open-addressing counter: the boxed HashMap version
+      // cost ~120 B/entry (~0.5 GB of untracked task heap at the cap,
+      // OOM-prone under concurrent tasks); this is 24 B/slot, grown by
+      // doubling so sparse partitions stay tiny
+      val m = new PairCounter(1 << 22)
+      def count(lo: Long, hi: Long): Unit = if (compressL) m.add(lo, hi, 1L)
+      var events = 0L; var trails = 0L
+      var mn = Long.MaxValue; var mx = Long.MinValue
+      var mxd = 0L; var mxFirst = Long.MinValue
+      var curUuid: UTF8String = null
+      var prevTs = 0L
+      val prevVals = new Array[Long](nF + 1)
+      while (it.hasNext) {
+        val r = it.next()
+        val uuid = r.getUTF8String(0)
+        // the one null guard of the write: the encode walk reads a null
+        // time as 0 and groups null uuids with no trail of their own
+        if (uuid == null) throw new NullPointerException(
+          "tdb package: null uuid — the uuids index holds one raw " +
+            "16-byte uuid per trail (tdb_cons_add) and has no null entry")
+        if (r.isNullAt(1)) throw new NullPointerException(
+          "tdb package: null time in trail " + uuid)
+        val ts = r.getLong(1)
+        events += 1
+        if (ts < mn) mn = ts
+        if (ts > mx) mx = ts
+        val isFirst = uuid != curUuid
+        if (isFirst) {
+          // the sort reuses its rows: keep a copy of the trail's uuid
+          curUuid = uuid.clone()
+          trails += 1
+          if (ts > mxFirst) mxFirst = ts
+          java.util.Arrays.fill(prevVals, 0L)
+        } else if (ts - prevTs > mxd) mxd = ts - prevTs
+        // every emitted item counts as a unigram (so every emission path
+        // has a fallback code), and an intra event's (ts item, first
+        // changed item) pair ALSO counts as a bigram candidate — the
+        // double-weighting skews code lengths slightly, it never loses a
+        // code path
+        var firstChanged = -1L
+        var f = 0
+        while (f < nF) {
+          val v = valueId(ids(f), r.getUTF8String(3 + f))
+          if (v != prevVals(f + 1)) {
+            val item = TdbFormat.makeItem(f + 1, v)
+            if (firstChanged == -1L) firstChanged = item
+            count(item, 0L)
+            prevVals(f + 1) = v
           }
-          // ts item needs minTs for a FIRST event's delta, so it (and the
-          // bigram) count for intra-trail events only
-          if (!isFirst) {
-            val tsItem = TdbFormat.makeItem(0, ts - prevTs)
-            count(tsItem, 0L)
-            if (bigramsL && firstChanged != -1L) count(tsItem, firstChanged)
-          }
-          prevTs = ts
+          f += 1
         }
-        val blocks = Array.fill(reducers)(new ArrayBuilder.ofLong)
-        m.iterator.foreach { case (l, h, c) =>
-          val b = blocks(reducerOf(l, h, reducers)); b += l; b += h; b += c
+        // ts item needs minTs for a FIRST event's delta, so it (and the
+        // bigram) count for intra-trail events only
+        if (!isFirst) {
+          val tsItem = TdbFormat.makeItem(0, ts - prevTs)
+          count(tsItem, 0L)
+          if (bigramsL && firstChanged != -1L) count(tsItem, firstChanged)
         }
-        val stats =
-          if (events == 0) null
-          else Array(events, trails, mn, mx, mxd, mxFirst)
-        Iterator.tabulate(reducers)(p =>
-          (p, (blocks(p).result(), if (p == 0) stats else null)))
-      }.partitionBy(new HashPartitioner(reducers)).mapPartitions { it =>
-        val sums = new PairCounter(Int.MaxValue)
-        var stats: Array[Long] = null
-        it.foreach { case (_, (syms, st)) =>
-          var i = 0
-          while (i < syms.length) {
-            sums.add(syms(i), syms(i + 1), syms(i + 2)); i += 3
-          }
-          if (st != null) stats =
-            if (stats == null) st
-            else Array(stats(0) + st(0), stats(1) + st(1),
-              math.min(stats(2), st(2)), math.max(stats(3), st(3)),
-              math.max(stats(4), st(4)), math.max(stats(5), st(5)))
-        }
-        val statRows =
-          if (stats == null) Iterator.empty
-          else stats.iterator.zipWithIndex.map { case (v, i) => (1, i.toLong, 0L, v) }
-        statRows ++ sums.iterator.collect { case (l, h, c) if c >= 2L => (0, l, h, c) }
-      }.takeOrdered(4096 + StatCount)(ModelOrder)
-      // stat id → value; every partition with events emits all six, so
-      // they are all present or (no events at all) all absent
-      val stats = new Array[Long](StatCount)
-      val freqs = new java.util.HashMap[(Long, Long), Long]()
-      modelRows.foreach { case (kind, lo, hi, cnt) =>
-        if (kind == 1) stats(lo.toInt) = cnt
-        else freqs.put((lo, hi), cnt)
+        prevTs = ts
       }
-      val numEvents = stats(0)
-      val numTrails = stats(1)
-      val minTs = stats(2)
-      val maxTs = stats(3)
-      var maxDelta = stats(4)
-      if (numEvents > 0 && stats(5) - minTs > maxDelta)
-        maxDelta = stats(5) - minTs
-      val codeMap = buildCodes(freqs)
-      // v0 codebook symbols are u64 (two 32-bit item halves) — a code for a
-      // wide item or a wide-item bigram cannot be represented, so such
-      // symbols go back to the literal path (correct either way; the
-      // encoder always falls back when a symbol has no code)
-      if (v0) codeMap.entrySet().removeIf(e =>
-        e.getKey._1 > 0xffffffffL || e.getKey._2 > 0xffffffffL)
-      // exact reference bound: valid deltas are 0..TDB_MAX_TIMEDELTA-1 and
-      // min_timestamp < TDB_MAX_TIMEDELTA, TDB_MAX_TIMEDELTA = 2^47 - 1
-      // (src/tdb_encode.c:113-122 `delta < TDB_MAX_TIMEDELTA`, :150-152)
-      val MaxTimedelta = (1L << 47) - 1
-      if (maxDelta >= MaxTimedelta || minTs >= MaxTimedelta)
-        throw graft.core.GraftError.TimestampTooLarge(
-          s"tdb package: timestamp delta $maxDelta / min $minTs exceeds " +
-            "TDB_MAX_TIMEDELTA = 2^47 - 1 (src/tdb_limits.h:33, " +
-            "src/tdb_encode.c:113-122)")
-      // the reference's timestamps are u64: a NEGATIVE min would round-trip
-      // through graft's own reader but write an info member the C engine
-      // parses as ~2^64, corrupting every decoded timestamp — refuse
-      if (minTs < 0L)
-        throw graft.core.GraftError.TimestampTooLarge(
-          s"tdb package: negative timestamp $minTs — the format's " +
-            "timestamps are unsigned (src/tdb_types.h)")
-
-      val numFields = fieldNames.length + 1
-      val fieldIdBits = TdbFormat.bitsNeeded(numFields.toLong)
-      val fieldBits = new Array[Int](numFields)
-      fieldBits(0) = TdbFormat.bitsNeeded(maxDelta)
-      fieldNames.indices.foreach(i =>
-        fieldBits(i + 1) = TdbFormat.bitsNeeded(lexicons(i).length.toLong))
-
-      // pass 2 (DISTRIBUTED encode): every partition encodes ITS trails —
-      // bigram Huffman gram when the event's (ts, first-field) pair has a
-      // code that beats its two parts, unigram Huffman when an item's code
-      // beats its literal, flag-0 literal otherwise (the reference's
-      // split, src/tdb_huffman.c: everything outside the codemap goes
-      // literal) — and emits ONE compact block per partition: the
-      // concatenated trail bit-streams (the package's own ~17 B/event
-      // density, NOT the rows), per-trail byte lengths, and the raw
-      // 16-byte uuids. ONE job encodes every partition IN PARALLEL and
-      // drains its block to the driver as the task finishes.
-      val bcCodeMap = spark.sparkContext.broadcast(codeMap)
-      val fieldIdBitsE = fieldIdBits
-      val fieldBitsE = fieldBits
-      val minTsE = minTs
-      val encode: Iterator[Row] => Block = { it =>
-        val cm = bcCodeMap.value
-        val ids = bcLex.value.ids
-        def unigram(field: Int, value: Long): (Int, Int) = {
-          val code = cm.get((TdbFormat.makeItem(field, value), 0L))
-          // code only when it is SHORTER than the literal for this field —
-          // a deep code can exceed a narrow field's literal width
-          if (code != null && code._2 < fieldIdBitsE + fieldBitsE(field)) code
-          else null
-        }
-        def costOf(field: Int, value: Long): Int = {
-          val c = unigram(field, value)
-          1 + (if (c != null) c._2 else fieldIdBitsE + fieldBitsE(field))
-        }
-        val enc = new BitWriter
-        def emit(field: Int, value: Long): Unit = {
-          val code = unigram(field, value)
-          if (code != null) enc.huffman(code._1, code._2)
-          else enc.literal(field, value, fieldIdBitsE, fieldBitsE)
-        }
-        // A malformed uuid would CORRUPT the package silently: hexToBytes
-        // of a short string writes <16 bytes into the uuids member and
-        // every later trail's index entry misaligns (non-hex chars turn
-        // into garbage bytes the same way). The reference requires raw
-        // 16-byte uuids at the API boundary (tdb_cons_add's uuid[16]);
-        // this writer takes the repo's 32-hex form, so validate it at the
-        // encoder, once per trail.
-        def requireHexUuid(u: String): Unit =
-          require(u.length == 32 && u.forall(c => Character.digit(c, 16) >= 0),
-            s"tdb package: uuid '$u' is not 32 hex chars — the uuids " +
-              "index is 16 raw bytes per trail and a malformed uuid " +
-              "would corrupt every entry after it")
-        val data = new ByteArrayOutputStream()
-        val uuids = new ByteArrayOutputStream()
-        val lens = ArrayBuffer.empty[Int]
-        var curUuid: String = null
-        var prevTs = 0L
-        val prevVals = new Array[Long](nF + 1)
-        val chF = new Array[Int](nF + 1)
-        val chV = new Array[Long](nF + 1)
-        def flushTrail(): Unit = if (curUuid != null) {
-          val bytes = enc.finish()
-          lens += bytes.length
-          data.write(bytes)
-          uuids.write(TdbFormat.hexToBytes(curUuid))
-          // executor-side size guard: fail loud here (with the partition's
-          // running total) rather than in BAOS array growth near 2 GB on a
-          // skewed-uuid partition — anything this size would be refused at
-          // the driver drain regardless
-          require(data.size().toLong < TdbWriter.DrainCapBytes,
-            s"tdb package: one partition's encoded block (${data.size()} B " +
-              s"after ${lens.length} trails) exceeds the 768 MiB writer " +
-              "cap — a skewed uuid distribution concentrated too many " +
-              "events in one partition; export a sample (the parquet " +
-              "directory is the scale layout)")
-          // the uuid stream (16 B/trail) is the buffer that overflows
-          // FIRST on a many-tiny-trail partition — bound it independently
-          require(uuids.size().toLong < TdbWriter.DrainCapBytes,
-            s"tdb package: one partition's uuid stream (${uuids.size()} B " +
-              s"after ${lens.length} trails) exceeds the 768 MiB writer " +
-              "cap — too many tiny trails landed in one partition; " +
-              "export a sample (the parquet directory is the scale layout)")
-        }
-        while (it.hasNext) {
-          val r = it.next()
-          val uuid = r.getString(0); val ts = r.getLong(1)
-          if (uuid != curUuid) {
-            flushTrail()
-            requireHexUuid(uuid)
-            curUuid = uuid; prevTs = minTsE
-            java.util.Arrays.fill(prevVals, 0L)
-            enc.reset()
-          }
-          // gather this event's changed (field, value) items first — the
-          // bigram decision needs the ts item and the FIRST changed item
-          // together before anything is written
-          var nCh = 0
-          var f = 0
-          while (f < nF) {
-            val v = valueId(ids(f), r.getString(3 + f))
-            if (v != prevVals(f + 1)) {
-              chF(nCh) = f + 1; chV(nCh) = v; nCh += 1
-              prevVals(f + 1) = v
-            }
-            f += 1
-          }
-          val delta = ts - prevTs
-          prevTs = ts
-          var from = 0
-          val big = if (!bigramsL || nCh == 0) null else cm.get(
-            (TdbFormat.makeItem(0, delta), TdbFormat.makeItem(chF(0), chV(0))))
-          if (big != null &&
-              big._2 + 1 < costOf(0, delta) + costOf(chF(0), chV(0))) {
-            enc.huffman(big._1, big._2); from = 1
-          } else emit(0, delta)
-          var c = from
-          while (c < nCh) { emit(chF(c), chV(c)); c += 1 }
-        }
-        flushTrail()
-        if (lens.isEmpty) null
-        else (uuids.toByteArray, lens.toArray, data.toByteArray)
+      val blocks = Array.fill(reducers)(new ArrayBuilder.ofLong)
+      m.iterator.foreach { case (l, h, c) =>
+        val b = blocks(reducerOf(l, h, reducers)); b += l; b += h; b += c
       }
-
-      // driver-side ASSEMBLY, the format's inherent single stream: the
-      // job's result handler receives the compact per-partition blocks as
-      // their tasks finish, then the driver puts trails in GLOBAL order
-      // with one sort over the uuid keys (the only place trail order is
-      // set; partitions hold theirs in hex order): v1 orders by the uuid's
-      // little-endian u128 value (compare raw bytes reversed), v0 by hex
-      // string == raw byte order. The drain cap is 768 MiB: the ordered
-      // dataBuf/uuidBuf below are a SECOND full copy of the blocks, so
-      // peak driver memory is ~2× the cap — 1.5 GiB total, refused LOUDLY
-      // rather than dying in ByteArrayOutputStream's array growth near
-      // Int.MaxValue (uuids at 16 B/trail can hit the limit first on
-      // many-tiny-trail corpora). The handler only records a refusal (a
-      // throw there would surface as SparkDriverExecutionException) and
-      // keeps no block past it; the driver throws it after the job. All
-      // blocks travel in one job, so spark.driver.maxResultSize (1 GiB by
-      // default) also bounds their sum.
-      val rows = sortable.rdd
-      val blockAt = new Array[Block](rows.getNumPartitions)
-      var refusal: String = null
-      locally {
-        var dataBytes = 0L; var uuidBytes = 0L; var trailsSeen = 0L
-        spark.sparkContext.runJob(rows, encode, (pid: Int, b: Block) =>
-          if (b != null && refusal == null) {
-            dataBytes += b._3.length.toLong
-            uuidBytes += b._1.length.toLong
-            trailsSeen += b._2.length.toLong
-            if (dataBytes < TdbWriter.DrainCapBytes &&
-                uuidBytes < TdbWriter.DrainCapBytes) blockAt(pid) = b
-            else refusal =
-              s"tdb package: trails.data ($dataBytes B) or uuids " +
-                s"($uuidBytes B) exceeds the 768 MiB in-memory writer " +
-                s"cap after $trailsSeen trails — export a sample " +
-                "(the parquet directory is the scale layout)"
-          })
-      }
-      require(refusal == null, refusal)
-      val blocks = blockAt.filter(_ != null)
-      val totalTrails = blocks.map(_._2.length.toLong).sum
-      require(totalTrails == numTrails,
-        s"tdb package: encoded $totalTrails trails, metadata counted " +
-          s"$numTrails — partition walk diverged (report this)")
-      // global order: index every trail as (block, idx, uuidOff, dataOff)
-      // and sort by its 16 uuid bytes under the format's comparator
-      final case class TrailRef(block: Int, uuidOff: Int, dataOff: Long,
-        len: Int)
-      val refs = new Array[TrailRef](
-        math.toIntExact(totalTrails))
-      var ri = 0
-      blocks.zipWithIndex.foreach { case ((_, lens, _), bi) =>
-        var off = 0L
+      val stats =
+        if (events == 0) null
+        else Array(events, trails, mn, mx, mxd, mxFirst)
+      Iterator.tabulate(reducers)(p =>
+        (p, (blocks(p).result(), if (p == 0) stats else null)))
+    }.partitionBy(new HashPartitioner(reducers)).mapPartitions { it =>
+      val sums = new PairCounter(Int.MaxValue)
+      var stats: Array[Long] = null
+      it.foreach { case (_, (syms, st)) =>
         var i = 0
-        while (i < lens.length) {
-          refs(ri) = TrailRef(bi, i * 16, off, lens(i))
-          off += lens(i); i += 1; ri += 1
+        while (i < syms.length) {
+          sums.add(syms(i), syms(i + 1), syms(i + 2)); i += 3
         }
+        if (st != null) stats =
+          if (stats == null) st
+          else Array(stats(0) + st(0), stats(1) + st(1),
+            math.min(stats(2), st(2)), math.max(stats(3), st(3)),
+            math.max(stats(4), st(4)), math.max(stats(5), st(5)))
       }
-      val cmp = new java.util.Comparator[TrailRef] {
-        override def compare(a: TrailRef, b: TrailRef): Int = {
-          val ua = blocks(a.block)._1; val ub = blocks(b.block)._1
-          var i = 0
-          while (i < 16) {
-            // v1: LE-u128 order == most-significant byte LAST
-            val ia = if (v0) a.uuidOff + i else a.uuidOff + 15 - i
-            val ib = if (v0) b.uuidOff + i else b.uuidOff + 15 - i
-            val d = (ua(ia) & 0xff) - (ub(ib) & 0xff)
-            if (d != 0) return d
-            i += 1
+      val statRows =
+        if (stats == null) Iterator.empty
+        else stats.iterator.zipWithIndex.map { case (v, i) => (1, i.toLong, 0L, v) }
+      statRows ++ sums.iterator.collect { case (l, h, c) if c >= 2L => (0, l, h, c) }
+    }.takeOrdered(4096 + StatCount)(ModelOrder)
+    // stat id → value; every partition with events emits all six, so
+    // they are all present or (no events at all) all absent
+    val stats = new Array[Long](StatCount)
+    val freqs = new java.util.HashMap[(Long, Long), Long]()
+    modelRows.foreach { case (kind, lo, hi, cnt) =>
+      if (kind == 1) stats(lo.toInt) = cnt
+      else freqs.put((lo, hi), cnt)
+    }
+    val numEvents = stats(0)
+    val numTrails = stats(1)
+    val minTs = stats(2)
+    val maxTs = stats(3)
+    var maxDelta = stats(4)
+    if (numEvents > 0 && stats(5) - minTs > maxDelta)
+      maxDelta = stats(5) - minTs
+    val codeMap = buildCodes(freqs)
+    // v0 codebook symbols are u64 (two 32-bit item halves) — a code for a
+    // wide item or a wide-item bigram cannot be represented, so such
+    // symbols go back to the literal path (correct either way; the
+    // encoder always falls back when a symbol has no code)
+    if (v0) codeMap.entrySet().removeIf(e =>
+      e.getKey._1 > 0xffffffffL || e.getKey._2 > 0xffffffffL)
+    // exact reference bound: valid deltas are 0..TDB_MAX_TIMEDELTA-1 and
+    // min_timestamp < TDB_MAX_TIMEDELTA, TDB_MAX_TIMEDELTA = 2^47 - 1
+    // (src/tdb_encode.c:113-122 `delta < TDB_MAX_TIMEDELTA`, :150-152)
+    val MaxTimedelta = (1L << 47) - 1
+    if (maxDelta >= MaxTimedelta || minTs >= MaxTimedelta)
+      throw graft.core.GraftError.TimestampTooLarge(
+        s"tdb package: timestamp delta $maxDelta / min $minTs exceeds " +
+          "TDB_MAX_TIMEDELTA = 2^47 - 1 (src/tdb_limits.h:33, " +
+          "src/tdb_encode.c:113-122)")
+    // the reference's timestamps are u64: a NEGATIVE min would round-trip
+    // through graft's own reader but write an info member the C engine
+    // parses as ~2^64, corrupting every decoded timestamp — refuse
+    if (minTs < 0L)
+      throw graft.core.GraftError.TimestampTooLarge(
+        s"tdb package: negative timestamp $minTs — the format's " +
+          "timestamps are unsigned (src/tdb_types.h)")
+
+    val numFields = fieldNames.length + 1
+    val fieldIdBits = TdbFormat.bitsNeeded(numFields.toLong)
+    val fieldBits = new Array[Int](numFields)
+    fieldBits(0) = TdbFormat.bitsNeeded(maxDelta)
+    fieldNames.indices.foreach(i =>
+      fieldBits(i + 1) = TdbFormat.bitsNeeded(lexicons(i).length.toLong))
+
+    // pass 2 (DISTRIBUTED encode): every partition encodes ITS trails —
+    // bigram Huffman gram when the event's (ts, first-field) pair has a
+    // code that beats its two parts, unigram Huffman when an item's code
+    // beats its literal, flag-0 literal otherwise (the reference's
+    // split, src/tdb_huffman.c: everything outside the codemap goes
+    // literal) — and emits ONE compact block per partition: the
+    // concatenated trail bit-streams (the package's own ~17 B/event
+    // density, NOT the rows), per-trail byte lengths, and the raw
+    // 16-byte uuids. ONE job encodes every partition IN PARALLEL and
+    // drains its block to the driver as the task finishes.
+    val bcCodeMap = spark.sparkContext.broadcast(codeMap)
+    val fieldIdBitsE = fieldIdBits
+    val fieldBitsE = fieldBits
+    val minTsE = minTs
+    val encode: Iterator[InternalRow] => Block = { it =>
+      val cm = bcCodeMap.value
+      val ids = bcLex.value.ids
+      def unigram(field: Int, value: Long): (Int, Int) = {
+        val code = cm.get((TdbFormat.makeItem(field, value), 0L))
+        // code only when it is SHORTER than the literal for this field —
+        // a deep code can exceed a narrow field's literal width
+        if (code != null && code._2 < fieldIdBitsE + fieldBitsE(field)) code
+        else null
+      }
+      def costOf(field: Int, value: Long): Int = {
+        val c = unigram(field, value)
+        1 + (if (c != null) c._2 else fieldIdBitsE + fieldBitsE(field))
+      }
+      val enc = new BitWriter
+      def emit(field: Int, value: Long): Unit = {
+        val code = unigram(field, value)
+        if (code != null) enc.huffman(code._1, code._2)
+        else enc.literal(field, value, fieldIdBitsE, fieldBitsE)
+      }
+      // A malformed uuid would CORRUPT the package silently: hexToBytes
+      // of a short string writes <16 bytes into the uuids member and
+      // every later trail's index entry misaligns (non-hex chars turn
+      // into garbage bytes the same way). The reference requires raw
+      // 16-byte uuids at the API boundary (tdb_cons_add's uuid[16]);
+      // this writer takes the repo's 32-hex form, so validate it at the
+      // encoder, once per trail.
+      def requireHexUuid(u: String): Unit =
+        require(u.length == 32 && u.forall(c => Character.digit(c, 16) >= 0),
+          s"tdb package: uuid '$u' is not 32 hex chars — the uuids " +
+            "index is 16 raw bytes per trail and a malformed uuid " +
+            "would corrupt every entry after it")
+      val data = new ByteArrayOutputStream()
+      val uuids = new ByteArrayOutputStream()
+      val lens = ArrayBuffer.empty[Int]
+      var curUuid: UTF8String = null
+      var curRaw: Array[Byte] = null
+      var prevTs = 0L
+      val prevVals = new Array[Long](nF + 1)
+      val chF = new Array[Int](nF + 1)
+      val chV = new Array[Long](nF + 1)
+      def flushTrail(): Unit = if (curUuid != null) {
+        val bytes = enc.finish()
+        lens += bytes.length
+        data.write(bytes)
+        uuids.write(curRaw)
+        // executor-side size guard: fail loud here (with the partition's
+        // running total) rather than in BAOS array growth near 2 GB on a
+        // skewed-uuid partition — anything this size would be refused at
+        // the driver drain regardless
+        require(data.size().toLong < TdbWriter.DrainCapBytes,
+          s"tdb package: one partition's encoded block (${data.size()} B " +
+            s"after ${lens.length} trails) exceeds the 768 MiB writer " +
+            "cap — a skewed uuid distribution concentrated too many " +
+            "events in one partition; export a sample (the parquet " +
+            "directory is the scale layout)")
+        // the uuid stream (16 B/trail) is the buffer that overflows
+        // FIRST on a many-tiny-trail partition — bound it independently
+        require(uuids.size().toLong < TdbWriter.DrainCapBytes,
+          s"tdb package: one partition's uuid stream (${uuids.size()} B " +
+            s"after ${lens.length} trails) exceeds the 768 MiB writer " +
+            "cap — too many tiny trails landed in one partition; " +
+            "export a sample (the parquet directory is the scale layout)")
+      }
+      while (it.hasNext) {
+        val r = it.next()
+        val uuid = r.getUTF8String(0); val ts = r.getLong(1)
+        if (uuid != curUuid) {
+          flushTrail()
+          val hex = uuid.toString
+          requireHexUuid(hex)
+          curUuid = uuid.clone(); curRaw = TdbFormat.hexToBytes(hex)
+          prevTs = minTsE
+          java.util.Arrays.fill(prevVals, 0L)
+          enc.reset()
+        }
+        // gather this event's changed (field, value) items first — the
+        // bigram decision needs the ts item and the FIRST changed item
+        // together before anything is written
+        var nCh = 0
+        var f = 0
+        while (f < nF) {
+          val v = valueId(ids(f), r.getUTF8String(3 + f))
+          if (v != prevVals(f + 1)) {
+            chF(nCh) = f + 1; chV(nCh) = v; nCh += 1
+            prevVals(f + 1) = v
           }
-          0
+          f += 1
         }
+        val delta = ts - prevTs
+        prevTs = ts
+        var from = 0
+        val big = if (!bigramsL || nCh == 0) null else cm.get(
+          (TdbFormat.makeItem(0, delta), TdbFormat.makeItem(chF(0), chV(0))))
+        if (big != null &&
+            big._2 + 1 < costOf(0, delta) + costOf(chF(0), chV(0))) {
+          enc.huffman(big._1, big._2); from = 1
+        } else emit(0, delta)
+        var c = from
+        while (c < nCh) { emit(chF(c), chV(c)); c += 1 }
       }
-      java.util.Arrays.sort(refs, cmp)
-      val dataBuf = new ByteArrayOutputStream()
-      val tocBuf = scala.collection.mutable.ArrayBuffer[Long]()
-      val uuidBuf = new ByteArrayOutputStream()
-      refs.foreach { t =>
-        tocBuf += dataBuf.size().toLong
-        dataBuf.write(blocks(t.block)._3, t.dataOff.toInt, t.len)
-        uuidBuf.write(blocks(t.block)._1, t.uuidOff, 16)
-      }
-      tocBuf += dataBuf.size().toLong
-      dataBuf.write(new Array[Byte](8)) // the 7-byte overread guarantee
-                                        // (src/tdb_encode.c:352-355)
+      flushTrail()
+      if (lens.isEmpty) null
+      else (uuids.toByteArray, lens.toArray, data.toByteArray)
+    }
 
-      // ---- assemble members ----
-      val infoBytes = s"$numTrails $numEvents $minTs $maxTs $maxDelta\n"
-        .getBytes(StandardCharsets.UTF_8)
-      // v1 terminates the fields file with an extra blank line; v0 has no
-      // such terminator — it reads until EOF (src/tdb.c fields_open comment)
-      val fieldsBytes = (fieldNames.mkString("\n") +
-        (if (v0) (if (fieldNames.nonEmpty) "\n" else "")
-         else if (fieldNames.nonEmpty) "\n\n" else "\n"))
-        .getBytes(StandardCharsets.UTF_8)
-      // toc entries are u32: trails.data is capped at 768 MiB above, far
-      // under the 4 GiB u32/u64 switch point (the READER still handles u64
-      // tocs, for reference-written packages past 4 GiB)
-      val tocWidth = 4
-      val tocBytes = {
-        val b = java.nio.ByteBuffer.allocate(tocBuf.length * tocWidth)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        tocBuf.foreach(o => b.putInt(o.toInt))
-        b.array()
-      }
-      val lexBytes: Seq[Array[Byte]] = lexicons.toSeq.map { values =>
-        val data = values.map(_.getBytes(StandardCharsets.UTF_8))
-        // v0 strings are 0-terminated (length read via strlen,
-        // src/tdb.c:134-136); v1 lengths come from the offset diffs. The
-        // offset table shape is identical — offsets simply point past the
-        // accumulated NULs in v0.
-        val term = if (v0) 1 else 0
-        val headerLen = 4 + (values.length + 1) * 4
-        val total = headerLen + data.map(_.length + term).sum
-        require(total <= 0xffffffffL, "tdb package: >4 GiB lexicon unsupported")
-        val b = java.nio.ByteBuffer.allocate(total)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        b.putInt(values.length)
-        var off = headerLen
-        data.foreach { d => b.putInt(off); off += d.length + term }
-        b.putInt(off)
-        data.foreach { d => b.put(d); if (v0) b.put(0.toByte) }
-        b.array()
-      }
-      val members: Seq[(String, Array[Byte])] =
-        (if (v0) Seq.empty // v0 predates the version file (src/tdb.c:260-261)
-         else Seq("version" -> "1".getBytes(StandardCharsets.UTF_8))) ++
-        Seq("info" -> infoBytes) ++
-        // tar.toc placeholder replaced below once offsets are known
-        (if (v0) Seq.empty else Seq("tar.toc" -> Array.empty[Byte])) ++
-        fieldNames.zip(lexBytes).map { case (f, b) => s"lexicon.$f" -> b } ++
-        Seq("fields" -> fieldsBytes,
-          "trails.codebook" ->
-            (if (v0) codebookBytesV0(codeMap) else codebookBytes(codeMap)),
-          "trails.toc" -> tocBytes,
-          "trails.data" -> dataBuf.toByteArray,
-          (if (v0) "cookies" else "uuids") -> uuidBuf.toByteArray)
-
-      if (v0) {
-        // v0 fixtures are directories (predating the single-file package)
-        val dirPath = new HPath(out)
-        val fs = dirPath.getFileSystem(
-          df.sparkSession.sparkContext.hadoopConfiguration)
-        fs.mkdirs(dirPath)
-        members.foreach { case (name, bytes) =>
-          val os = fs.create(new HPath(dirPath, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        return
-      }
-
-      // reference-style max-size preallocation for tar.toc
-      // (src/tdb_cons_package.c:166-199: name lengths + 43 bytes per line)
-      val tocMax = members.map(_._1.length + 43).sum +
-        "TAR TOC FOR TDB VER 1\n".length + 1
-      val withToc = members.map {
-        case ("tar.toc", _) => ("tar.toc", new Array[Byte](tocMax))
-        case m => m
-      }
-      // data offsets are deterministic: headers at 512-byte boundaries
+    // driver-side ASSEMBLY, the format's inherent single stream: the
+    // job's result handler receives the compact per-partition blocks as
+    // their tasks finish, then the driver puts trails in GLOBAL order
+    // with one sort over the uuid keys (the only place trail order is
+    // set; partitions hold theirs in hex order): v1 orders by the uuid's
+    // little-endian u128 value (compare raw bytes reversed), v0 by hex
+    // string == raw byte order. The drain cap is 768 MiB: the ordered
+    // dataBuf/uuidBuf below are a SECOND full copy of the blocks, so
+    // peak driver memory is ~2× the cap — 1.5 GiB total, refused LOUDLY
+    // rather than dying in ByteArrayOutputStream's array growth near
+    // Int.MaxValue (uuids at 16 B/trail can hit the limit first on
+    // many-tiny-trail corpora). The handler only records a refusal (a
+    // throw there would surface as SparkDriverExecutionException) and
+    // keeps no block past it; the driver throws it after the job. All
+    // blocks travel in one job, so spark.driver.maxResultSize (1 GiB by
+    // default) also bounds their sum.
+    val blockAt = new Array[Block](rows.getNumPartitions)
+    var refusal: String = null
+    locally {
+      var dataBytes = 0L; var uuidBytes = 0L; var trailsSeen = 0L
+      spark.sparkContext.runJob(rows, encode, (pid: Int, b: Block) =>
+        if (b != null && refusal == null) {
+          dataBytes += b._3.length.toLong
+          uuidBytes += b._1.length.toLong
+          trailsSeen += b._2.length.toLong
+          if (dataBytes < TdbWriter.DrainCapBytes &&
+              uuidBytes < TdbWriter.DrainCapBytes) blockAt(pid) = b
+          else refusal =
+            s"tdb package: trails.data ($dataBytes B) or uuids " +
+              s"($uuidBytes B) exceeds the 768 MiB in-memory writer " +
+              s"cap after $trailsSeen trails — export a sample " +
+              "(the parquet directory is the scale layout)"
+        })
+    }
+    require(refusal == null, refusal)
+    val blocks = blockAt.filter(_ != null)
+    val totalTrails = blocks.map(_._2.length.toLong).sum
+    require(totalTrails == numTrails,
+      s"tdb package: encoded $totalTrails trails, metadata counted " +
+        s"$numTrails — partition walk diverged (report this)")
+    // global order: index every trail as (block, idx, uuidOff, dataOff)
+    // and sort by its 16 uuid bytes under the format's comparator
+    final case class TrailRef(block: Int, uuidOff: Int, dataOff: Long,
+      len: Int)
+    val refs = new Array[TrailRef](
+      math.toIntExact(totalTrails))
+    var ri = 0
+    blocks.zipWithIndex.foreach { case ((_, lens, _), bi) =>
       var off = 0L
-      val offsets = withToc.map { case (name, bytes) =>
-        val dataOff = off + 512
-        off = dataOff + ((bytes.length + 511L) / 512L) * 512L
-        (name, dataOff, bytes.length.toLong)
+      var i = 0
+      while (i < lens.length) {
+        refs(ri) = TrailRef(bi, i * 16, off, lens(i))
+        off += lens(i); i += 1; ri += 1
       }
-      require(offsets.find(_._1 == "tar.toc").get._2 == 2560L,
-        "tdb package: tar.toc must land at byte 2560 (src/tdb_package.h:11)")
-      val tocContent = ("TAR TOC FOR TDB VER 1\n" +
-        offsets.map { case (n, o, s) => s"$n $o $s\n" }.mkString + "\n")
-        .getBytes(StandardCharsets.UTF_8)
-      require(tocContent.length <= tocMax, "tar.toc overflow")
-      val finalMembers = withToc.map {
-        case ("tar.toc", pad) =>
-          ("tar.toc", tocContent ++ new Array[Byte](pad.length - tocContent.length))
-        case m => m
-      }
-
-      // ---- write the tar ----
-      val p = new HPath(out)
-      val os = p.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration).create(p, true)
-      try {
-        finalMembers.foreach { case (name, bytes) =>
-          os.write(tarHeader(name, bytes.length.toLong))
-          os.write(bytes)
-          val rem = (512 - (bytes.length % 512)) % 512
-          if (rem > 0) os.write(new Array[Byte](rem))
+    }
+    val cmp = new java.util.Comparator[TrailRef] {
+      override def compare(a: TrailRef, b: TrailRef): Int = {
+        val ua = blocks(a.block)._1; val ub = blocks(b.block)._1
+        var i = 0
+        while (i < 16) {
+          // v1: LE-u128 order == most-significant byte LAST
+          val ia = if (v0) a.uuidOff + i else a.uuidOff + 15 - i
+          val ib = if (v0) b.uuidOff + i else b.uuidOff + 15 - i
+          val d = (ua(ia) & 0xff) - (ub(ib) & 0xff)
+          if (d != 0) return d
+          i += 1
         }
-        os.write(new Array[Byte](1024)) // end-of-archive blocks
-      } finally os.close()
-    } finally sortable.unpersist()
+        0
+      }
+    }
+    java.util.Arrays.sort(refs, cmp)
+    val dataBuf = new ByteArrayOutputStream()
+    val tocBuf = scala.collection.mutable.ArrayBuffer[Long]()
+    val uuidBuf = new ByteArrayOutputStream()
+    refs.foreach { t =>
+      tocBuf += dataBuf.size().toLong
+      dataBuf.write(blocks(t.block)._3, t.dataOff.toInt, t.len)
+      uuidBuf.write(blocks(t.block)._1, t.uuidOff, 16)
+    }
+    tocBuf += dataBuf.size().toLong
+    dataBuf.write(new Array[Byte](8)) // the 7-byte overread guarantee
+                                      // (src/tdb_encode.c:352-355)
+
+    // ---- assemble members ----
+    val infoBytes = s"$numTrails $numEvents $minTs $maxTs $maxDelta\n"
+      .getBytes(StandardCharsets.UTF_8)
+    // v1 terminates the fields file with an extra blank line; v0 has no
+    // such terminator — it reads until EOF (src/tdb.c fields_open comment)
+    val fieldsBytes = (fieldNames.mkString("\n") +
+      (if (v0) (if (fieldNames.nonEmpty) "\n" else "")
+       else if (fieldNames.nonEmpty) "\n\n" else "\n"))
+      .getBytes(StandardCharsets.UTF_8)
+    // toc entries are u32: trails.data is capped at 768 MiB above, far
+    // under the 4 GiB u32/u64 switch point (the READER still handles u64
+    // tocs, for reference-written packages past 4 GiB)
+    val tocWidth = 4
+    val tocBytes = {
+      val b = java.nio.ByteBuffer.allocate(tocBuf.length * tocWidth)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      tocBuf.foreach(o => b.putInt(o.toInt))
+      b.array()
+    }
+    val lexBytes: Seq[Array[Byte]] = lexicons.toSeq.map { data =>
+      // v0 strings are 0-terminated (length read via strlen,
+      // src/tdb.c:134-136); v1 lengths come from the offset diffs. The
+      // offset table shape is identical — offsets simply point past the
+      // accumulated NULs in v0.
+      val term = if (v0) 1 else 0
+      val headerLen = 4 + (data.length + 1) * 4
+      val total = headerLen + data.map(_.length + term).sum
+      require(total <= 0xffffffffL, "tdb package: >4 GiB lexicon unsupported")
+      val b = java.nio.ByteBuffer.allocate(total)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.putInt(data.length)
+      var off = headerLen
+      data.foreach { d => b.putInt(off); off += d.length + term }
+      b.putInt(off)
+      data.foreach { d => b.put(d); if (v0) b.put(0.toByte) }
+      b.array()
+    }
+    val members: Seq[(String, Array[Byte])] =
+      (if (v0) Seq.empty // v0 predates the version file (src/tdb.c:260-261)
+       else Seq("version" -> "1".getBytes(StandardCharsets.UTF_8))) ++
+      Seq("info" -> infoBytes) ++
+      // tar.toc placeholder replaced below once offsets are known
+      (if (v0) Seq.empty else Seq("tar.toc" -> Array.empty[Byte])) ++
+      fieldNames.zip(lexBytes).map { case (f, b) => s"lexicon.$f" -> b } ++
+      Seq("fields" -> fieldsBytes,
+        "trails.codebook" ->
+          (if (v0) codebookBytesV0(codeMap) else codebookBytes(codeMap)),
+        "trails.toc" -> tocBytes,
+        "trails.data" -> dataBuf.toByteArray,
+        (if (v0) "cookies" else "uuids") -> uuidBuf.toByteArray)
+
+    if (v0) {
+      // v0 fixtures are directories (predating the single-file package)
+      val dirPath = new HPath(out)
+      val fs = dirPath.getFileSystem(
+        df.sparkSession.sparkContext.hadoopConfiguration)
+      fs.mkdirs(dirPath)
+      members.foreach { case (name, bytes) =>
+        val os = fs.create(new HPath(dirPath, name), true)
+        try os.write(bytes) finally os.close()
+      }
+      return
+    }
+
+    // reference-style max-size preallocation for tar.toc
+    // (src/tdb_cons_package.c:166-199: name lengths + 43 bytes per line)
+    val tocMax = members.map(_._1.length + 43).sum +
+      "TAR TOC FOR TDB VER 1\n".length + 1
+    val withToc = members.map {
+      case ("tar.toc", _) => ("tar.toc", new Array[Byte](tocMax))
+      case m => m
+    }
+    // data offsets are deterministic: headers at 512-byte boundaries
+    var off = 0L
+    val offsets = withToc.map { case (name, bytes) =>
+      val dataOff = off + 512
+      off = dataOff + ((bytes.length + 511L) / 512L) * 512L
+      (name, dataOff, bytes.length.toLong)
+    }
+    require(offsets.find(_._1 == "tar.toc").get._2 == 2560L,
+      "tdb package: tar.toc must land at byte 2560 (src/tdb_package.h:11)")
+    val tocContent = ("TAR TOC FOR TDB VER 1\n" +
+      offsets.map { case (n, o, s) => s"$n $o $s\n" }.mkString + "\n")
+      .getBytes(StandardCharsets.UTF_8)
+    require(tocContent.length <= tocMax, "tar.toc overflow")
+    val finalMembers = withToc.map {
+      case ("tar.toc", pad) =>
+        ("tar.toc", tocContent ++ new Array[Byte](pad.length - tocContent.length))
+      case m => m
+    }
+
+    // ---- write the tar ----
+    val p = new HPath(out)
+    val os = p.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration).create(p, true)
+    try {
+      finalMembers.foreach { case (name, bytes) =>
+        os.write(tarHeader(name, bytes.length.toLong))
+        os.write(bytes)
+        val rem = (512 - (bytes.length % 512)) % 512
+        if (rem > 0) os.write(new Array[Byte](rem))
+      }
+      os.write(new Array[Byte](1024)) // end-of-archive blocks
+    } finally os.close()
   }
 
   /** One partition's encoded trails: raw 16-byte uuids, per-trail byte
@@ -682,38 +690,60 @@ object TdbWriter {
     }
   }
 
-  /** Per-field lexicons: the distinct non-null non-empty values, in UTF-8
-    * byte order (the order `orderBy` gives a string column; String's
-    * UTF-16 compareTo orders supplementary characters differently). ONE
-    * pass over the big cache builds the fused (field, value) distinct
-    * frame (a DISK_ONLY cache pass deserializes full rows whatever is
-    * selected, so per-field passes would each pay the whole deserialize),
-    * and ONE job reads it: each partition ships at most cap+1 values per
-    * field, so driver memory is bounded BEFORE the refusal fires — never
-    * "count then re-collect", which would double-scan, and never an
-    * uncapped collect that OOMs first and refuses never. Partitions are
-    * disjoint after the distinct, so the driver concatenates and sorts. */
-  private def readLexicons(sortable: DataFrame, fieldNames: Seq[String],
-      maxLexiconValues: Long): Array[Array[String]] = {
-    if (fieldNames.isEmpty) return Array.empty
+  /** Per-field lexicons: the distinct non-null non-empty values as UTF-8
+    * bytes, sorted by unsigned bytes (the order `orderBy` gives a string
+    * column; String's UTF-16 compareTo orders supplementary characters
+    * differently). ONE job, shaped like the model pass: each partition
+    * walk keeps its distinct values per field in a set capped at cap+1
+    * and ships every reducer ONE block, the values that hash to it; each
+    * reducer merges its blocks per field under the same cap, and the
+    * driver receives disjoint sets, stops growing a field past cap+1 and
+    * sorts.
+    *
+    * The refusal is exact. A field with at most cap distinct values never
+    * fills a set, so every value is shipped and the driver gets exactly
+    * the distinct set. A field with more either fills some partition's set
+    * (cap+1 distinct values shipped) or ships every value; in both cases
+    * the reducers together hold more than cap values, because a reducer
+    * either holds all it was sent or fills its own set. Memory is bounded
+    * BEFORE the refusal fires — never "count then re-collect", and never an
+    * uncapped collect that OOMs first and refuses never: a walk or a
+    * reducer holds at most cap+1 values per field, the driver at most
+    * cap+1 plus one reducer's block. */
+  private def readLexicons(rows: RDD[InternalRow], reducers: Int,
+      fieldNames: Seq[String], maxLexiconValues: Long): Array[Array[Array[Byte]]] = {
     val nF = fieldNames.length
-    val fvDistinct = sortable.select(explode(array(
-        fieldNames.zipWithIndex.map { case (f, i) =>
-          struct(lit(i).as("fi"), col(f).as("v")) }: _*)).as("e"))
-      .select(col("e.fi").as("fi"), col("e.v").as("v"))
-      .filter(col("v").isNotNull && col("v") =!= "")
-      .distinct()
+    if (nF == 0) return Array.empty
     val keep = math.min(maxLexiconValues, Int.MaxValue - 1L).toInt + 1
-    val perField = Array.fill(nF)(ArrayBuffer.empty[Array[Byte]])
-    sortable.sparkSession.sparkContext.runJob(fvDistinct.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => {
-        val vals = Array.fill(nF)(ArrayBuffer.empty[Array[Byte]])
-        it.foreach { r =>
-          val b = vals(r.getInt(0))
-          if (b.length < keep) b += r.getUTF8String(1).getBytes
+    def sets() = Array.fill(nF)(new java.util.HashSet[UTF8String]())
+    val merged = rows.mapPartitions { it =>
+      val seen = sets()
+      it.foreach { r =>
+        var f = 0
+        while (f < nF) {
+          val s = seen(f)
+          val v = r.getUTF8String(3 + f)
+          // the sort reuses its rows: keep a copy of each new value
+          if (s.size < keep && v != null && v.numBytes > 0 && !s.contains(v))
+            s.add(v.clone())
+          f += 1
         }
-        vals.map(_.toArray)
-      },
+      }
+      val blocks = Array.fill(reducers, nF)(ArrayBuffer.empty[Array[Byte]])
+      seen.indices.foreach(f => seen(f).forEach(v =>
+        blocks(Math.floorMod(31 * v.hashCode + f, reducers))(f) += v.getBytes))
+      Iterator.tabulate(reducers)(p => (p, blocks(p).map(_.toArray)))
+    }.partitionBy(new HashPartitioner(reducers)).mapPartitions { it =>
+      val held = sets()
+      it.foreach { case (_, block) =>
+        block.indices.foreach(f => block(f).foreach(b =>
+          if (held(f).size < keep) held(f).add(UTF8String.fromBytes(b))))
+      }
+      Iterator.single(held.map(_.toArray(Array.empty[UTF8String]).map(_.getBytes)))
+    }
+    val perField = Array.fill(nF)(ArrayBuffer.empty[Array[Byte]])
+    rows.sparkContext.runJob(merged,
+      (it: Iterator[Array[Array[Array[Byte]]]]) => it.next(),
       // past the cap the field is refused anyway: stop growing it
       (_: Int, part: Array[Array[Array[Byte]]]) =>
         part.indices.foreach(i =>
@@ -728,31 +758,27 @@ object TdbWriter {
             "if the driver has the memory, or keep the db in the " +
             "parquet 'dir' layout (no lexicon bound).")
       vals.toArray.sortWith(java.util.Arrays.compareUnsigned(_, _) < 0)
-        .map(new String(_, StandardCharsets.UTF_8))
     }.toArray
   }
 
   /** The broadcast lexicons. Executors build the value → id maps from the
     * sorted arrays once per broadcast (the lazy val is not serialized);
-    * ids are 1-based, 0 being NULL. */
-  private final class LexiconIds(values: Array[Array[String]])
+    * ids are 1-based, 0 being NULL. The maps are keyed by `UTF8String`,
+    * so the walks look up a row's bytes as they are. */
+  private final class LexiconIds(values: Array[Array[Array[Byte]]])
       extends Serializable {
-    @transient lazy val ids: Array[java.util.HashMap[String, java.lang.Long]] =
+    @transient lazy val ids: Array[java.util.HashMap[UTF8String, java.lang.Long]] =
       values.map { vs =>
-        val m = new java.util.HashMap[String, java.lang.Long](vs.length * 2)
-        vs.indices.foreach(i => m.put(vs(i), i + 1L))
+        val m = new java.util.HashMap[UTF8String, java.lang.Long](vs.length * 2)
+        vs.indices.foreach(i => m.put(UTF8String.fromBytes(vs(i)), i + 1L))
         m
       }
   }
 
   /** A value's lexicon id: NULL and the empty string are both id 0. */
-  private def valueId(ids: java.util.HashMap[String, java.lang.Long],
-      s: String): Long =
-    if (s == null || s.isEmpty) 0L else ids.get(s)
-
-  private def valueId(ids: java.util.HashMap[String, java.lang.Long],
+  private def valueId(ids: java.util.HashMap[UTF8String, java.lang.Long],
       s: UTF8String): Long =
-    if (s == null || s.numBytes == 0) 0L else ids.get(s.toString)
+    if (s == null || s.numBytes == 0) 0L else ids.get(s)
 
   /** Minimal ustar header, field layout per the POSIX spec; magic matches
     * the reference packages' "ustar  \0" (old GNU) so headers byte-compare
@@ -898,8 +924,10 @@ object TdbWriter {
     * surface in every partition). Past the cap, which keys got in
     * follows the partition's walk order: hex uuid order, then (time,
     * seq). The model reducers merge the walks' counts into uncapped
-    * counters, so the reduce is exact. Occupancy = nonzero count (live
-    * counts are positive). */
+    * counters, so the reduce is exact. The lexicon pass's per-field sets
+    * are capped too, at maxLexiconValues + 1, but there a full set means
+    * a refusal, never a silent stop ([[readLexicons]] has the argument).
+    * Occupancy = nonzero count (live counts are positive). */
   private final class PairCounter(cap: Int) {
     private var mask = 2047
     private var los = new Array[Long](mask + 1)

@@ -17,14 +17,14 @@ class ConsSpec extends SparkSpec {
 
   private def uuidOf(i: Int): String = f"$i%032x"
 
-  test("finalizeTo runs at most 3 Spark jobs: the stats ride the write") {
-    // the write's exchange, the write (which also takes the sidecar's
-    // stats), and open's schema inference; nothing is read back
+  test("finalizeTo runs at most 2 Spark jobs: the stats ride the write and open reuses the written schema") {
+    // the write's exchange and the write, which also takes the sidecar's
+    // stats; nothing is read back, and open infers no schema
     val df = (0 until 60).map(i => (uuidOf(i % 7), 100L + i, s"e${i % 3}", i.toLong))
       .toDF("uuid", "time", "a", "seq")
     val cons = new TrailDBCons(spark, Seq("a")).add(df)
     val (db, jobs) = jobsDuring(cons.finalizeTo(tmp(), 2))
-    assert(jobs <= 3, s"finalizeTo ran $jobs jobs")
+    assert(jobs <= 2, s"finalizeTo ran $jobs jobs")
     assert(db.numEvents === 60L)
   }
 

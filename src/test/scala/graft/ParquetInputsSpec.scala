@@ -93,6 +93,34 @@ class ParquetInputsSpec extends SparkSpec {
     } finally spark.conf.set(key, before)
   }
 
+  test("finalizeTo seeds the schema a cold inference returns, so open starts no job") {
+    def check(name: String, cons: TrailDBCons): Unit = {
+      val path = tmp(name)
+      cons.finalizeTo(path, 2)
+      val cold = spark.read.parquet(path).schema
+      val (seeded, jobs) = jobsDuring(ParquetInputs.read(spark, path).schema)
+      assert(jobs === 0, s"$name: the read inferred")
+      // StructField equality covers names, types, nullability and metadata
+      assert(seeded === cold, name)
+      val (db, openJobs) = jobsDuring(graft.core.TrailDB.open(spark, path))
+      assert(openJobs === 0, s"$name: open ran $openJobs jobs")
+      assert(db.df.schema === cold, name)
+      // the seeded entry carries the confs of the write
+      val key = "spark.sql.parquet.binaryAsString"
+      val before = spark.conf.get(key)
+      try {
+        spark.conf.set(key, (!before.toBoolean).toString)
+        val (flipped, flipJobs) = jobsDuring(ParquetInputs.read(spark, path))
+        assert(flipJobs >= 1, s"$name: a flipped conf reused the seed")
+        assert(flipped.schema === spark.read.parquet(path).schema, name)
+      } finally spark.conf.set(key, before)
+    }
+    check("cons", new TrailDBCons(spark, Seq("a", "b")).add(
+      (0 until 30).map(i => (f"${i % 4}%032x", 10L * i, s"x${i % 3}", null: String, i.toLong))
+        .toDF("uuid", "time", "a", "b", "seq")))
+    check("empty", new TrailDBCons(spark, Seq("a")))
+  }
+
   test("a missing path raises Spark's own PATH_NOT_FOUND") {
     val path = tmp("absent")
     val plain = intercept[AnalysisException](spark.read.parquet(path))

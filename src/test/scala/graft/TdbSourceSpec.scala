@@ -529,16 +529,21 @@ class TdbSourceSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-tdb-lexcap")
     // 'tag' has 12 distinct values; 'etype' has 2 — a cap of 10 must name
     // the offending FIELD and never OOM first (each partition ships at
-    // most cap+1 values per field). The second run keeps every shuffle
-    // partition (no AQE coalescing) on a repartitioned input, so the
-    // over-cap field reaches the driver spread over several partitions.
-    // Neither the refusal nor the export strands a cached RDD.
+    // most cap+1 values per field). In the first two runs no partition
+    // holds more than 10 tags and only their union is over the cap; the
+    // second keeps every shuffle partition (no AQE coalescing) on a
+    // repartitioned input. In the third, one trail holds all 12 tags, so
+    // one partition's set fills on its own. Neither the refusal nor the
+    // export strands a cached RDD.
     val sc = spark.sparkContext
     val df = (0 until 24).map(i =>
         (f"${i % 3}%032x", 100L + i, s"e${i % 2}", s"t${i % 12}"))
       .toDF("uuid", "time", "etype", "tag")
+    val oneTrail = (0 until 12).map(i => ("9" * 32, 100L + i, s"e${i % 2}", s"t$i"))
+      .toDF("uuid", "time", "etype", "tag")
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    for ((input, spread) <- Seq(df -> false, df.repartition(4) -> true)) try {
+    for ((input, spread, events) <- Seq((df, false, 24L),
+        (df.repartition(4), true, 24L), (oneTrail, false, 12L))) try {
       if (spread) spark.conf.set(coalesce, "false")
       val cached = sc.getPersistentRDDs.keySet
       val e = intercept[graft.core.GraftError] {
@@ -555,7 +560,7 @@ class TdbSourceSpec extends SparkSpec {
         maxLexiconValues = 12)
       assert(sc.getPersistentRDDs.keySet === cached, "export leaked a cache")
       val back = spark.read.format("tdb").load(out)
-      assert(back.count() === 24L)
+      assert(back.count() === events)
       assert(back.select("tag").distinct().count() === 12L)
     } finally spark.conf.unset(coalesce)
   }
@@ -630,16 +635,49 @@ class TdbSourceSpec extends SparkSpec {
     assert(back.toSeq === values)
   }
 
-  test("writePackage runs at most 6 Spark jobs") {
-    // the writer's passes: the input shuffle and its cache, the lexicon
-    // distinct and its read, one model job, and one encode-and-drain job
+  test("writePackage runs at most 4 Spark jobs") {
+    // the writer's passes over its one sorted shuffle: the shuffle, one
+    // lexicon job, one model job, and one encode-and-drain job
     val df = (0 until 200).map(i =>
         (f"${i % 17}%032x", 100L + i, s"e${i % 3}", s"t${i % 7}"))
       .toDF("uuid", "time", "etype", "tag")
     val dir = Files.createTempDirectory("graft-tdb-jobs")
     val (_, jobs) = jobsDuring(
       TdbWriter.writePackage(df, Seq("etype", "tag"), s"$dir/jobs.tdb"))
-    assert(jobs <= 6, s"writePackage ran $jobs jobs")
+    assert(jobs <= 4, s"writePackage ran $jobs jobs")
+  }
+
+  test("a null uuid or a null time is refused by name, never as a diverged walk") {
+    // the uuids index holds 16 raw bytes per trail (tdb_cons_add takes a
+    // raw uuid), so a null uuid has no entry to take; the model walk is
+    // the one guard, as the encode walk reads a null time as 0
+    val dir = Files.createTempDirectory("graft-tdb-nulls")
+    def refusal(rows: Seq[(Option[String], Option[Long], String)],
+        onePartition: Boolean): String = {
+      val shuffleParts = "spark.sql.shuffle.partitions"
+      val prior = spark.conf.get(shuffleParts)
+      try {
+        if (onePartition) spark.conf.set(shuffleParts, "1")
+        val e = intercept[Exception](TdbWriter.writePackage(
+          rows.toDF("uuid", "time", "etype"), Seq("etype"), s"$dir/n.tdb"))
+        assert(!e.getMessage.contains("report this"), e.getMessage)
+        e.getMessage
+      } finally spark.conf.set(shuffleParts, prior)
+    }
+    val real = (0 until 17).flatMap(t =>
+      Seq((Option(f"$t%032x"), Option(10L + t), "a"),
+        (Option(f"$t%032x"), Option(20L + t), "b")))
+    val nullUuid = Seq((Option.empty[String], Option(5L), "a"),
+      (Option.empty[String], Option(6L), "b"))
+    // one partition: the null-uuid rows sort first and real trails follow
+    val first = refusal(nullUuid ++ real.take(4), onePartition = true)
+    assert(first.contains("null uuid") && first.contains("no null entry"), first)
+    // listed after real trails, spread over the shuffle's partitions
+    val after = refusal(real ++ nullUuid, onePartition = false)
+    assert(after.contains("null uuid") && after.contains("no null entry"), after)
+    val noTime = refusal(real.take(3) :+ ((Option("1" * 32), None, "c")),
+      onePartition = false)
+    assert(noTime.contains("null time in trail " + "1" * 32), noTime)
   }
 
   test("trail order comes from the assembly sort, not the partition sort") {

@@ -27,11 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~`spark.sql.files.maxPartitionBytes` of trails.data, and a task seeks
   * directly to its byte range — tasks never read the whole archive, so a
   * 1000-executor scan parallelizes by byte range exactly like a Parquet
-  * scan. Lexicons and the codebook are small shared members, cached per
-  * JVM. `uuid = <hex>` / `uuid IN (...)` filters push down to trail ranges
-  * via binary search over the v1-ordered uuid index (little-endian u128
-  * order, reference src/tdb.c:552-585) — a point lookup reads ONE trail's
-  * bytes, the tdb_get_trail_id shape.
+  * scan. Each task loads the codebook and its projected lexicons itself
+  * and keeps nothing once it finishes. A value is a view of its
+  * lexicon's bytes, never a decoded string. `uuid = <hex>` / `uuid IN (...)` filters push down to
+  * trail ranges via binary search over the v1-ordered uuid index
+  * (little-endian u128 order, reference src/tdb.c:552-585) — a point
+  * lookup reads ONE trail's bytes, the tdb_get_trail_id shape.
   */
 final class TdbDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tdb"
@@ -42,12 +43,24 @@ final class TdbDataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TdbTable.schemaOf(TdbFormat.TdbMeta.open(path(options)))
+  // Spark calls inferSchema, then getTable, on one provider instance per
+  // load: the table reuses the meta inference opened, so a load walks the
+  // archive's headers once
+  private var inferred: (String, TdbFormat.TdbMeta) = _
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val p = path(options)
+    inferred = (p, TdbFormat.TdbMeta.open(p))
+    TdbTable.schemaOf(inferred._2)
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new TdbTable(properties.get("path"))
+      properties: util.Map[String, String]): Table = {
+    val p = properties.get("path")
+    new TdbTable(p,
+      if (inferred != null && inferred._1 == p) inferred._2
+      else TdbFormat.TdbMeta.open(p))
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -60,8 +73,8 @@ object TdbTable {
       meta.fieldNames.map(f => StructField(f, StringType, nullable = true)).toList)
 }
 
-final class TdbTable(path: String) extends Table with SupportsRead {
-  private lazy val meta = TdbFormat.TdbMeta.open(path)
+final class TdbTable(path: String, meta: TdbFormat.TdbMeta)
+    extends Table with SupportsRead {
 
   override def name(): String = s"tdb:$path"
   override def schema(): StructType = TdbTable.schemaOf(meta)
@@ -152,7 +165,7 @@ final class TdbScan(meta: TdbFormat.TdbMeta, required: StructType,
             if (limit >= dataEnd) meta.numTrails
             else boundaryBefore(limit, t + 1, meta.numTrails)
           if (end <= t) end = t + 1 // a single whale trail > target
-          val endOffs = meta.trailOffset(end)
+          val endOffs = if (end == meta.numTrails) dataEnd else meta.trailOffset(end)
           parts += TdbInputPartition(t, end, offs, endOffs)
           t = end
           offs = endOffs
@@ -219,8 +232,10 @@ final class TdbScan(meta: TdbFormat.TdbMeta, required: StructType,
     0
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def createReaderFactory(): PartitionReaderFactory = {
+    meta.fieldBits // read the lexicon headers here, once, not per task
     new TdbReaderFactory(meta, required.fieldNames)
+  }
 }
 
 final class TdbReaderFactory(meta: TdbFormat.TdbMeta,
@@ -250,8 +265,6 @@ final class TdbPartitionReader(meta: TdbFormat.TdbMeta,
   // the whole range's data bytes, padded for the 64-bit word loads
   private val data: Array[Byte] = meta.archive.readRange("trails.data",
     part.startOffs, part.endOffs - part.startOffs, pad = 16)
-  private val uuidBytes: Array[Byte] = meta.archive.readRange(meta.uuidsMember,
-    part.startTrail * 16, nTrails.toLong * 16)
   private val cb = TdbFormat.codebook(meta.archive, meta.version)
 
   // projection plan: for each output column, -2 = uuid, -1 = time,
@@ -264,35 +277,33 @@ final class TdbPartitionReader(meta: TdbFormat.TdbMeta,
       require(i >= 0, s"tdb: unknown column $f")
       i
   }
-  // lexicons only for PROJECTED ofields (column pruning skips the rest)
-  private val lexicons: Array[Array[String]] = {
-    val out = new Array[Array[String]](meta.fieldNames.length)
+  // uuid bytes and lexicons only for PROJECTED columns (column pruning
+  // skips the rest)
+  private val uuidBytes: Array[Byte] =
+    if (!colPlan.contains(-2)) null
+    else meta.archive.readRange(meta.uuidsMember,
+      part.startTrail * 16, nTrails.toLong * 16)
+  private val lexicons: Array[TdbFormat.Lexicon] = {
+    val out = new Array[TdbFormat.Lexicon](meta.fieldNames.length)
     colPlan.filter(_ >= 0).distinct.foreach(i => out(i) = meta.lexicon(i + 1))
     out
   }
 
   private var trail = 0
-  private var decoder: TdbFormat.TrailDecoder = null
+  private val decoder = new TdbFormat.TrailDecoder(meta, cb, data)
   private var currentUuid: UTF8String = null
   private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(columns.length)
 
   override def next(): Boolean = {
     while (true) {
-      if (decoder != null && decoder.next()) {
+      if (decoder.next()) {
         fill()
         return true
       }
-      // advance to the next non-empty trail
+      // advance to the next trail, decoded in place in the range buffer
       if (trail >= nTrails) return false
-      val from = toc(trail) - toc(0)
-      val len = toc(trail + 1) - toc(trail)
-      currentUuid = UTF8String.fromString(TdbFormat.bytesToHex(
-        java.util.Arrays.copyOfRange(uuidBytes, trail * 16, trail * 16 + 16)))
-      decoder =
-        if (len == 0) null
-        else new TdbFormat.TrailDecoder(meta, cb,
-          java.util.Arrays.copyOfRange(data, from.toInt,
-            math.min(from + len + 16, data.length.toLong).toInt), len)
+      if (uuidBytes != null) currentUuid = TdbFormat.hexUtf8(uuidBytes, trail * 16)
+      decoder.reset(toc(trail) - toc(0), toc(trail + 1) - toc(trail))
       trail += 1
     }
     false
@@ -306,9 +317,7 @@ final class TdbPartitionReader(meta: TdbFormat.TdbMeta,
         case -1 => row.update(i, decoder.timestamp)
         case f =>
           val v = decoder.value(f)
-          row.update(i,
-            if (v == 0L) null
-            else UTF8String.fromString(lexicons(f)((v - 1).toInt)))
+          row.update(i, if (v == 0L) null else lexicons(f)((v - 1).toInt))
       }
       i += 1
     }

@@ -1,9 +1,11 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Reader core for the reference engine's legacy `.tdb` binary format
   * (format version 1), re-implemented in Scala from the published on-disk
@@ -74,12 +76,7 @@ object TdbFormat {
     * a per-member file for directories — so tasks can seek to exactly the
     * byte range they need (a partition never reads the whole archive). */
   final class TdbArchive private (val path: String, val isTar: Boolean,
-      members: Map[String, (String, Member)],
-      /** Identity of the bytes BEHIND the path (length + mtime of the
-        * package file, or a fold over member files): the per-JVM
-        * lexicon/codebook caches key on it so overwriting a package at
-        * the same path never serves stale arrays to later reads. */
-      val fingerprint: Long = 0L) extends Serializable {
+      members: Map[String, (String, Member)]) extends Serializable {
 
     def memberNames: Iterable[String] = members.keys
 
@@ -131,15 +128,10 @@ object TdbFormat {
     }
 
     private def openDir(fs: FileSystem, dir: HPath): TdbArchive = {
-      val stats = fs.listStatus(dir).filter(_.isFile)
-      val members = stats.map { st =>
+      val members = fs.listStatus(dir).filter(_.isFile).map { st =>
         st.getPath.getName -> (st.getPath.toString, Member(0L, st.getLen))
       }.toMap
-      val fp = stats.foldLeft(1125899906842597L) { (h, st) =>
-        h * 31 + st.getPath.getName.hashCode * 31 + st.getLen * 31 +
-          st.getModificationTime
-      }
-      new TdbArchive(dir.toString, isTar = false, members, fp)
+      new TdbArchive(dir.toString, isTar = false, members)
     }
 
     /** Plain ustar walk: 512-byte headers (name at 0, size as octal at
@@ -148,26 +140,10 @@ object TdbFormat {
       * seek-based reader (src/tdb_package.c:16-82); parsing the tar
       * headers directly yields the same offsets without trusting it. */
     private def openTar(fs: FileSystem, file: HPath): TdbArchive = {
-      val st = fs.getFileStatus(file)
-      val fileLen = st.getLen
-      // The per-JVM archive cache keys on this fingerprint. (length,
-      // mtime) alone is too weak: mtime has one-second granularity, so
-      // an overwrite within the same second that happens to keep the
-      // file length would serve the predecessor's lexicon/codebook.
-      // The walk below visits every member header anyway, so fold in
-      // each member's full 512-byte header (name, size, per-member
-      // mtime, checksum) AND a 64-byte sample from each END of its
-      // data — two extra small reads per member. NOT a full content
-      // hash (that would read the whole archive at open): an overwrite
-      // that preserves lengths, member mtimes, and both 64-byte edges
-      // of every member while editing only interior bytes still
-      // collides; full certainty requires a changed mtime second or
-      // path.
-      var fp = fileLen * 31 + st.getModificationTime
+      val fileLen = fs.getFileStatus(file).getLen
       val in = fs.open(file)
       try {
         val hdr = new Array[Byte](512)
-        val sample = new Array[Byte](64)
         var off = 0L
         val members = Map.newBuilder[String, (String, Member)]
         var done = false
@@ -186,26 +162,12 @@ object TdbFormat {
             val size = java.lang.Long.parseLong(
               cstr(hdr, 124, 12).trim match { case "" => "0"; case s => s }, 8)
             val typeflag = hdr(156)
-            if (typeflag == '0'.toByte || typeflag == 0.toByte) {
+            if (typeflag == '0'.toByte || typeflag == 0.toByte)
               members += name -> (file.toString, Member(off + 512, size))
-              fp = fp * 31 + java.util.Arrays.hashCode(hdr)
-              val n = math.min(size, 64L).toInt
-              if (n > 0 && off + 512 + size <= fileLen) {
-                in.readFully(sample, 0, n) // head (stream sits at the data)
-                var i = 0
-                while (i < n) { fp = fp * 31 + sample(i); i += 1 }
-                if (size > 64L) { // tail — string tables grow at the end
-                  in.seek(off + 512 + size - n)
-                  in.readFully(sample, 0, n)
-                  i = 0
-                  while (i < n) { fp = fp * 31 + sample(i); i += 1 }
-                }
-              }
-            }
             off += 512 + ((size + 511) / 512) * 512
           }
         }
-        new TdbArchive(file.toString, isTar = true, members.result(), fp)
+        new TdbArchive(file.toString, isTar = true, members.result())
       } finally in.close()
     }
 
@@ -233,7 +195,9 @@ object TdbFormat {
 
     /** Bits for a literal's field id / per-field value, derived exactly
       * like huff_field_stats (src/tdb_huffman.c:232-247 with
-      * bits_needed :34-43). */
+      * bits_needed :34-43). `fieldBits` reads each lexicon's header
+      * word; [[TdbScan]] forces it on the driver, so the value ships
+      * with the serialized meta and no task repeats those reads. */
     lazy val fieldIdBits: Int = bitsNeeded(numFields.toLong)
     lazy val fieldBits: Array[Int] = {
       val a = new Array[Int](numFields)
@@ -255,11 +219,10 @@ object TdbFormat {
       if (wide) leLong(head, 0) else leInt(head, 0) & 0xffffffffL
     }
 
-    /** Materialize one ofield's full lexicon: values[v-1] is value id v
-      * (id 0 is NULL). Task-side, cached per (path, fingerprint, field)
-      * per JVM — the fingerprint keeps an overwritten package from
-      * serving its predecessor's lexicon. */
-    def lexicon(field: Int): Array[String] = {
+    /** Load one ofield's lexicon (field is 1-based). Each caller gets
+      * its own load: nothing is kept once the caller drops it, so an
+      * overwritten package never serves its predecessor's lexicon. */
+    def lexicon(field: Int): Lexicon = {
       val name = s"lexicon.${fieldNames(field - 1)}"
       // honest bound: materialization is one JVM byte array, so a member
       // past ~2 GiB (u32-offset members up to 4 GiB are format-valid,
@@ -269,33 +232,45 @@ object TdbFormat {
         s"tdb: lexicon member '$name' is ${archive.size(name)} bytes — " +
           "too large for the JVM reader's single-array materialization; " +
           "keep a db this wide in the parquet 'dir' layout")
-      TdbFormat.lexiconCache.computeIfAbsent(
-          (archive.path, archive.fingerprint, field), _ => {
-        val raw = archive.readAll(name)
-        val wide = archive.size(name) > 0xffffffffL
-        val width = if (wide) 8 else 4
-        val n = (if (wide) leLong(raw, 0) else leInt(raw, 0) & 0xffffffffL).toInt
-        def offAt(i: Int): Long =
-          if (wide) leLong(raw, width + i * 8)
-          else leInt(raw, width + i * 4) & 0xffffffffL
-        Array.tabulate(n) { i =>
-          val a = offAt(i)
-          val b =
-            if (version == 0L) {
-              // v0 strings are 0-terminated, length via strlen
-              // (src/tdb.c:134-136); v1 lengths come from the offset diff
-              var e = a.toInt
-              while (e < raw.length && raw(e) != 0) e += 1
-              e.toLong
-            } else offAt(i + 1)
-          new String(raw, a.toInt, (b - a).toInt, StandardCharsets.UTF_8)
-        }
-      })
+      val raw = archive.readAll(name)
+      val wide = archive.size(name) > 0xffffffffL
+      val width = if (wide) 8 else 4
+      val n = if (wide) leLong(raw, 0) else leInt(raw, 0) & 0xffffffffL
+      // v1 stores n + 1 offsets (the last ends the last value), v0 n
+      val offsets = if (version == 0L) n else n + 1
+      require(n >= 0 && offsets <= (raw.length - width) / width,
+        s"tdb: lexicon member '$name' claims $n values, more offsets " +
+          s"than its ${raw.length} bytes hold")
+      def offAt(i: Int): Long =
+        if (wide) leLong(raw, width + i * 8)
+        else leInt(raw, width + i * 4) & 0xffffffffL
+      val bounds = new Array[Int](2 * n.toInt)
+      var i = 0
+      while (i < n) {
+        val a = offAt(i)
+        val b =
+          if (version == 0L) {
+            // v0 strings are 0-terminated, length via strlen
+            // (src/tdb.c:134-136); v1 lengths come from the offset diff
+            var e = a
+            while (e >= 0 && e < raw.length && raw(e.toInt) != 0) e += 1
+            e
+          } else offAt(i + 1)
+        // the values are read as unchecked views of `raw`, so an entry
+        // outside it must refuse here
+        require(0 <= a && a <= b && b <= raw.length,
+          s"tdb: lexicon member '$name' entry ${i + 1} spans [$a, $b), " +
+            s"outside its ${raw.length} bytes")
+        bounds(2 * i) = a.toInt
+        bounds(2 * i + 1) = b.toInt
+        i += 1
+      }
+      new Lexicon(raw, bounds)
     }
 
     /** uuid hex for one trail (driver-side point access). */
     def uuidHex(trailId: Long): String =
-      bytesToHex(archive.readRange(uuidsMember, trailId * 16, 16))
+      hexUtf8(archive.readRange(uuidsMember, trailId * 16, 16), 0).toString
 
     /** trails.toc entry width: u32 iff trails.data < 4 GiB
       * (src/tdb_decode.c:7-13). */
@@ -328,6 +303,19 @@ object TdbFormat {
     }
   }
 
+  /** One ofield's lexicon: the member's bytes as read, plus each
+    * entry's [start, end) in them (v0's NUL-terminated ends are found
+    * once, at load). Entry `i` is value id i+1; id 0 is NULL and has no
+    * entry. Values are [[UTF8String]] views of the member bytes — no
+    * per-value object is kept and no value is copied or decoded. */
+  final class Lexicon private[TdbFormat] (raw: Array[Byte], bounds: Array[Int]) {
+    def size: Int = bounds.length / 2
+
+    /** Entry `i` (value id i+1), viewing the member bytes. */
+    def apply(i: Int): UTF8String =
+      UTF8String.fromBytes(raw, bounds(2 * i), bounds(2 * i + 1) - bounds(2 * i))
+  }
+
   // ---- primitive codecs ----
 
   def bitsNeeded(max: Long): Int = {
@@ -344,16 +332,19 @@ object TdbFormat {
   def leLong(b: Array[Byte], off: Int): Long =
     (leInt(b, off) & 0xffffffffL) | ((leInt(b, off + 4) & 0xffffffffL) << 32)
 
-  private val hexDigits = "0123456789abcdef".toCharArray
-  def bytesToHex(b: Array[Byte]): String = {
-    val out = new Array[Char](b.length * 2)
+  private val hexDigits = "0123456789abcdef".getBytes(StandardCharsets.US_ASCII)
+
+  /** The 16 bytes at `b(off)` as 32 lowercase hex digits, written
+    * straight into a new [[UTF8String]]'s bytes. */
+  def hexUtf8(b: Array[Byte], off: Int): UTF8String = {
+    val out = new Array[Byte](32)
     var i = 0
-    while (i < b.length) {
-      out(2 * i) = hexDigits((b(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(b(i) & 0xf)
+    while (i < 16) {
+      out(2 * i) = hexDigits((b(off + i) >> 4) & 0xf)
+      out(2 * i + 1) = hexDigits(b(off + i) & 0xf)
       i += 1
     }
-    new String(out)
+    UTF8String.fromBytes(out)
   }
 
   def hexToBytes(s: String): Array[Byte] = {
@@ -370,17 +361,15 @@ object TdbFormat {
 
   /** Little-endian bit read of up to 48 bits (src/tdb_bits.h:9-14: a
     * 64-bit LE word load at byte offs>>3 shifted by offs&7 — the buffer
-    * must have ≥7 padding bytes past the last addressed byte). */
-  def readBits(data: Array[Byte], offs: Long, bits: Int): Long = {
-    val base = (offs >>> 3).toInt
-    var w = 0L
-    var i = 7
-    while (i >= 0) { w = (w << 8) | (data(base + i) & 0xffL); i -= 1 }
-    (w >>> (offs & 7).toInt) & (if (bits >= 64) -1L else (1L << bits) - 1)
-  }
+    * must have ≥7 padding bytes past the last addressed byte). `data`
+    * is a little-endian view of the bytes, so the load is one bounds-
+    * checked 8-byte read. */
+  def readBits(data: ByteBuffer, offs: Long, bits: Int): Long =
+    (data.getLong((offs >>> 3).toInt) >>> (offs & 7).toInt) &
+      (if (bits >= 64) -1L else (1L << bits) - 1)
 
   /** 64-bit read as two ≤48-bit reads (src/tdb_bits.h:32-43). */
-  def readBits64(data: Array[Byte], offs: Long): Long =
+  def readBits64(data: ByteBuffer, offs: Long): Long =
     readBits(data, offs, 48) | (readBits(data, offs + 48, 16) << 48)
 
   // ---- item packing (src/tdb_types.h:105-135) ----
@@ -399,64 +388,76 @@ object TdbFormat {
     } else field.toLong | (value << 8)
 
   /** The expanded Huffman decode table: symbols (lo, hi 64 bits) + code
-    * length per 16-bit index. Cached per path per JVM (1.3 MB). */
+    * length per 16-bit index (1.3 MB), loaded by each reader that
+    * needs it and kept no longer. */
   final class Codebook(val lo: Array[Long], val hi: Array[Long],
       val bits: Array[Int])
 
-  def codebook(ar: TdbArchive, version: Long): Codebook =
-    codebookCache.computeIfAbsent((ar.path, ar.fingerprint, version), _ => {
-      val n = 65536
-      val entry = if (version == 0L) 12 else 20
-      require(ar.size("trails.codebook") >= n.toLong * entry,
-        s"tdb: trails.codebook is ${ar.size("trails.codebook")} bytes, " +
-          s"expected ${n.toLong * entry}")
-      val raw = ar.readAll("trails.codebook")
-      val lo = new Array[Long](n); val hi = new Array[Long](n)
-      val bits = new Array[Int](n)
-      var i = 0
-      while (i < n) {
-        if (version == 0L) {
-          // v0 entry: packed {u64 symbol, u32 bits}; the u64 packs the
-          // bigram as (first item lo32, second item hi32) — widened to
-          // the v1 (lo, hi) pair exactly like huff_convert_v0_codebook
-          // (src/tdb_huffman.c:377-420)
-          val sym = leLong(raw, i * 12)
-          lo(i) = sym & 0xffffffffL
-          hi(i) = sym >>> 32
-          bits(i) = leInt(raw, i * 12 + 8)
-        } else {
-          lo(i) = leLong(raw, i * 20)
-          hi(i) = leLong(raw, i * 20 + 8)
-          bits(i) = leInt(raw, i * 20 + 16)
-        }
-        i += 1
+  def codebook(ar: TdbArchive, version: Long): Codebook = {
+    val n = 65536
+    val entry = if (version == 0L) 12 else 20
+    require(ar.size("trails.codebook") >= n.toLong * entry,
+      s"tdb: trails.codebook is ${ar.size("trails.codebook")} bytes, " +
+        s"expected ${n.toLong * entry}")
+    val raw = ByteBuffer.wrap(ar.readAll("trails.codebook"))
+      .order(ByteOrder.LITTLE_ENDIAN)
+    val lo = new Array[Long](n); val hi = new Array[Long](n)
+    val bits = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      if (version == 0L) {
+        // v0 entry: packed {u64 symbol, u32 bits}; the u64 packs the
+        // bigram as (first item lo32, second item hi32) — widened to
+        // the v1 (lo, hi) pair exactly like huff_convert_v0_codebook
+        // (src/tdb_huffman.c:377-420)
+        val sym = raw.getLong(i * 12)
+        lo(i) = sym & 0xffffffffL
+        hi(i) = sym >>> 32
+        bits(i) = raw.getInt(i * 12 + 8)
+      } else {
+        lo(i) = raw.getLong(i * 20)
+        hi(i) = raw.getLong(i * 20 + 8)
+        bits(i) = raw.getInt(i * 20 + 16)
       }
-      new Codebook(lo, hi, bits)
-    })
-
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Codebook]()
-  private val lexiconCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), Array[String]]()
-  private[sources] def clearCaches(): Unit = {
-    codebookCache.clear(); lexiconCache.clear()
+      i += 1
+    }
+    new Codebook(lo, hi, bits)
   }
 
-  /** Decode ONE trail's bit stream into events. `data` must be the
-    * trail's bytes with ≥13 bytes of readable padding after them: the
-    * worst-case [[readBits64]] at the last valid bit offset touches byte
-    * `trailBytes + 12` (its second 16-bit half does a full 64-bit word
-    * load 6 bytes past the first's base). Call sites pad with 16.
-    * Emits (timestamp, values) with values(i) = value id of ofield i+1
-    * (0 = NULL) — full events, edge-encoding already resolved
+  /** Decodes trail bit streams in place in `bytes`, one trail per
+    * [[reset]]. A trail's bytes must be followed by ≥13 readable bytes:
+    * the worst-case [[readBits64]] at the last valid bit offset touches
+    * byte `trailBytes + 12` (its second 16-bit half does a full 64-bit
+    * word load 6 bytes past the first's base). Those bytes may be the
+    * next trail's — as in the reference, which decodes inside its
+    * mapping — or the padding after the last trail; call sites pad with
+    * 16. Emits (timestamp, values) with values(i) = value id of ofield
+    * i+1 (0 = NULL) — full events, edge-encoding already resolved
     * (src/tdb_decode.c:227-329's non-edge path). */
-  final class TrailDecoder(meta: TdbMeta, cb: Codebook,
-      data: Array[Byte], trailBytes: Long) {
-    private val sizeBits: Long = 8L * trailBytes - readBits(data, 0L, 3)
-    private var offset: Long = 3L
-    private var tstamp: Long = meta.minTimestamp
+  final class TrailDecoder(meta: TdbMeta, cb: Codebook, bytes: Array[Byte]) {
+    private val data = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    private var sizeBits: Long = 0L
+    private var offset: Long = 0L
+    private var tstamp: Long = 0L
     private val prevVals = new Array[Long](meta.numFields)
-    private val fieldIdMask = (1L << meta.fieldIdBits) - 1
+    private val fieldIdBits = meta.fieldIdBits
+    private val fieldBits = meta.fieldBits
+    private val fieldIdMask = (1L << fieldIdBits) - 1
+    // the gram in (gLo, gHi) is the next event's first, already decoded
+    // by the previous event's look-ahead
+    private var pending = false
+
+    /** Start the trail stored in `data[from, from + trailBytes)`. */
+    def reset(from: Long, trailBytes: Long): Unit = {
+      val base = 8L * from
+      offset = base + 3
+      sizeBits =
+        if (trailBytes == 0L) offset
+        else base + 8L * trailBytes - readBits(data, base, 3)
+      tstamp = meta.minTimestamp
+      pending = false
+      java.util.Arrays.fill(prevVals, 0L)
+    }
 
     /** The gram decode of src/tdb_huffman.h:66-88: returns (loItem,
       * hiItem) packed as two longs via the out fields. */
@@ -470,10 +471,10 @@ object TdbFormat {
         gLo = cb.lo(idx); gHi = cb.hi(idx)
       } else {
         val field = ((enc >>> 1) & fieldIdMask).toInt
-        val vBits = meta.fieldBits(field)
-        val value = (enc >>> (1 + meta.fieldIdBits)) &
+        val vBits = fieldBits(field)
+        val value = (enc >>> (1 + fieldIdBits)) &
           (if (vBits >= 64) -1L else (1L << vBits) - 1)
-        offset += 1 + meta.fieldIdBits + vBits
+        offset += 1 + fieldIdBits + vBits
         gLo = makeItem(field, value); gHi = 0L
       }
     }
@@ -481,14 +482,14 @@ object TdbFormat {
     /** Advance to the next event; false at end of trail. After a true
       * return, read [[timestamp]] and [[values]]. */
     def next(): Boolean = {
-      if (offset >= sizeBits) return false
-      decodeGram()
+      if (pending) pending = false
+      else if (offset >= sizeBits) return false
+      else decodeGram()
       tstamp += itemVal(gLo)
       var item = gHi
       if (item != 0) prevVals(itemField(item)) = itemVal(item)
       var more = true
       while (more && offset < sizeBits) {
-        val prevOffs = offset
         decodeGram()
         item = gLo
         var field = itemField(item)
@@ -501,7 +502,9 @@ object TdbFormat {
             continue = field != 0 && item != 0
           }
         } else {
-          offset = prevOffs
+          // a timestamp item starts the next event: keep its gram rather
+          // than rewinding to decode it again
+          pending = true
           more = false
         }
       }

@@ -94,8 +94,8 @@ object TdbItems {
     require(idx >= 0,
       s"tdb: unknown field '$fieldName' (have ${meta.fieldNames.mkString(", ")})")
     // field 0 is the implicit time field; lexicons are 1-indexed
-    meta.lexicon(idx + 1).zipWithIndex
-      .map { case (v, i) => (i + 1L, v) }.toSeq
+    val lex = meta.lexicon(idx + 1)
+    (0 until lex.size).map(i => (i + 1L, lex(i).toString))
       .toDF("val_id", "value")
   }
 }

@@ -258,14 +258,54 @@ class TdbSourceSpec extends SparkSpec {
     val want = rows.map(t => (t._1, t._2, t._3, Option(t._4).getOrElse("")))
       .sorted.toSeq
     assert(back === want)
-    // multi-partition read: the scan honors the same partition-size knob
-    // as the parquet reader; force tiny partitions and re-check the count
+    // the scan honors the same partition-size knob as the parquet reader;
+    // its 1 MiB floor keeps this package one range (the split itself is
+    // covered by the "over 2 MiB" test)
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     try {
       val n = spark.read.format("tdb").load(out).count()
       assert(n === 1200L)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
+  test("a package over 2 MiB of trails.data splits into ranges that read the same rows as one range") {
+    // random 40-bit timestamps and four 30000-value fields that change on
+    // every event: ~15 literal-coded bytes per event
+    val n = 200000L
+    def pick(salt: Int) =
+      concat(lit(s"v$salt-"), (abs(hash(col("id"), lit(salt))) % 30000).cast("string"))
+    val df = spark.range(n).select(
+      lower(lpad(hex(col("id") % 5000), 32, "0")).as("uuid"),
+      (abs(xxhash64(col("id"))) % (1L << 40)).as("time"),
+      pick(1).as("f1"), pick(2).as("f2"), pick(3).as("f3"), pick(4).as("f4"))
+    val dir = Files.createTempDirectory("graft-tdb-split")
+    val out = s"$dir/big.tdb"
+    TdbWriter.writePackage(df, Seq("f1", "f2", "f3", "f4"), out, compress = false)
+    val dataBytes = TdbFormat.TdbArchive.open(out).size("trails.data")
+    assert(dataBytes > (2L << 20), s"trails.data is $dataBytes bytes")
+    def withSplit[T](bytes: String)(body: => T): T = {
+      val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", bytes)
+      try body finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    }
+    val whole = s"$dir/whole"
+    withSplit("1g") {
+      val one = spark.read.format("tdb").load(out)
+      assert(one.rdd.getNumPartitions === 1)
+      one.write.parquet(whole)
+    }
+    withSplit("1m") {
+      val split = spark.read.format("tdb").load(out)
+      assert(split.rdd.getNumPartitions > 1)
+      val ref = spark.read.parquet(whole)
+      for (cols <- Seq(split.columns.toSeq, Seq("f3"))) {
+        val a = split.select(cols.map(col): _*)
+        val b = ref.select(cols.map(col): _*)
+        assert(a.count() === n && b.count() === n, cols)
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, cols)
+      }
+    }
   }
 
   test("a directory of members opens like a tar package (tdb_open S_ISDIR path)") {
@@ -422,6 +462,28 @@ class TdbSourceSpec extends SparkSpec {
       TdbFormat.TdbMeta.open(s"$dir/nope")
     }
     assert(e2.getMessage.contains("no such file"), e2.getMessage)
+    // lexicon values are views of the member bytes, so an offset outside
+    // the member (past its end, or a u32 of 2^31 or more) must refuse at
+    // load rather than be read
+    val pkg = s"$dir/lex.tdb"
+    TdbWriter.writePackage(
+      Seq(("ab" * 16, 5L, "z")).toDF("uuid", "time", "k"), Seq("k"), pkg)
+    val good = TdbFormat.TdbArchive.open(pkg)
+    val lex = good.readAll("lexicon.k")
+    // (offset index, u32 value): the one value's end past the member,
+    // then its start at 2^31
+    for ((entry, off) <- Seq((1, lex.length + 1), (0, Int.MinValue))) {
+      val mdir = Files.createTempDirectory(dir, "members")
+      good.memberNames.foreach(m => Files.write(mdir.resolve(m), good.readAll(m)))
+      val bad = lex.clone()
+      java.nio.ByteBuffer.wrap(bad).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(4 + 4 * entry, off)
+      Files.write(mdir.resolve("lexicon.k"), bad)
+      val e3 = intercept[IllegalArgumentException] {
+        TdbFormat.TdbMeta.open(mdir.toString).lexicon(1)
+      }
+      assert(e3.getMessage.contains("outside its"), e3.getMessage)
+    }
   }
 
   test("SQL DDL surface: a tdb mounts as a temp view for plain SQL users") {
@@ -797,15 +859,13 @@ class TdbSourceSpec extends SparkSpec {
     def write(v: String): Unit = TdbWriter.writePackage(
       Seq(("ab" * 16, 1L, v)).toDF("uuid", "time", "f1"), Seq("f1"), out)
     // "old-value" and "new-value" are the SAME length, and the rewrite
-    // lands within the same mtime second — the adversarial case for a
-    // (length, mtime) fingerprint. The member-data sample folded into
-    // the tar fingerprint is what distinguishes the two packages.
+    // lands within the same mtime second — the adversarial case for any
+    // reader state kept per (path, length, mtime).
     write("old-value")
     assert(spark.read.format("tdb").load(out)
       .select("f1").head().getString(0) === "old-value")
     write("new-value")
-    // the per-JVM lexicon/codebook caches key on (path, fingerprint) —
-    // before that, this read served the OLD lexicon array
+    // a reader that kept lexicons per path would serve the OLD array here
     assert(spark.read.format("tdb").load(out)
       .select("f1").head().getString(0) === "new-value")
   }
